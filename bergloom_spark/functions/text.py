@@ -1,9 +1,16 @@
 """Text analysis for large-scale training-data pipelines.
 
 Everything here is built-in JVM expressions (no Python UDFs in the row
-path) so the operators whole-stage-codegen and scale linearly with
-executors. Each helper has a DuckDB SQL twin (``*_sql``) used by the
-driver's oracle checks.
+path) so the operators scale linearly with executors. Each helper has a
+DuckDB SQL twin (``*_sql``) used by the oracle checks.
+
+Higher-order functions (``transform``, ``filter``, ``zip_with``,
+``aggregate``) are ``CodegenFallback``: they run interpreted, and Spark
+shares no subexpression inside their lambdas. So never reference a
+per-row array expression such as ``tokens(col)`` inside a HOF lambda —
+it is recomputed for every element, O(tokens²) a row. Reference a
+column, a lambda variable bound by :func:`let`, or a shifted slice
+(:func:`shifted_slices`, :func:`ngrams`) instead.
 
 Operators: token counting (whitespace tokenizer), quality scoring
 (length / alphabetic ratio / stopword ratio / mean token length),
@@ -12,6 +19,8 @@ hash + min-shingle rolling fingerprint), token shingles.
 """
 
 from __future__ import annotations
+
+from collections.abc import Callable
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -269,20 +278,47 @@ def canonical_text_sql(expr: str) -> str:
     )
 
 
-def shingles(col: Column | str, n: int = 3) -> Column:
-    """n-token shingles joined by single spaces (rolling window).
+def let(value: Column, body: Callable[[Column], Column]) -> Column:
+    """``body(v)`` with ``v`` bound to ``value``, evaluated once per row.
 
-    Docs shorter than ``n`` tokens yield an EMPTY array — guarded
-    explicitly because ``sequence(1, 0)`` in Spark counts DOWN
-    (``[1, 0]``), which both crashes ``slice`` (start 0) and disagrees
-    with DuckDB's ``range(1, 1)`` = ``[]``."""
-    toks = tokens(col)
-    cnt = F.size(toks) - (n - 1)
-    idx = F.sequence(F.lit(1), F.greatest(cnt, F.lit(1)))
-    sh = F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i, n)))
-    return F.when(cnt >= 1, sh).otherwise(
-        F.array().cast("array<string>")
-    )
+    Spark shares no subexpression inside a higher-order function, so an
+    expression named twice under one is computed twice. Binding it to
+    the lambda variable of a one-element ``transform`` computes it once."""
+    return F.transform(F.array(value), body)[0]
+
+
+def shifted_slices(toks: Column, n: int) -> list[Column]:
+    """The ``n`` slices ``slice(toks, j, cnt)`` for j = 1..n, with
+    cnt = size - n + 1 clamped at 0: zipped element-wise they give the
+    contiguous n-token windows of ``toks``. NULL ``toks`` → NULLs."""
+    cnt = F.greatest(F.size(toks) - (n - 1), F.lit(0))
+    return [F.slice(toks, j, cnt) for j in range(1, n + 1)]
+
+
+def ngrams(toks: Column, n: int) -> Column:
+    """Contiguous n-token windows of ``toks``, joined by single spaces.
+
+    Folds ``zip_with`` over :func:`shifted_slices` of ``toks``, bound
+    once per row by :func:`let`, so a row costs one evaluation of
+    ``toks`` plus O(n · tokens). Fewer than ``n`` tokens, or NULL
+    ``toks``, yields ``[]``."""
+
+    def fold(t: Column) -> Column:
+        parts = shifted_slices(t, n)
+        out = parts[0]
+        for part in parts[1:]:
+            out = F.zip_with(out, part, lambda a, b: F.concat_ws(" ", a, b))
+        return F.coalesce(out, F.array().cast("array<string>"))
+
+    return let(toks, fold)
+
+
+def shingles(col: Column | str, n: int = 3) -> Column:
+    """n-token shingles joined by single spaces (rolling window), built
+    by :func:`ngrams` from shifted slices of one token array. Docs
+    shorter than ``n`` tokens and NULL docs yield ``[]``, as the DuckDB
+    twin does."""
+    return ngrams(tokens(col), n)
 
 
 def shingles_sql(expr: str, n: int = 3) -> str:
@@ -321,8 +357,8 @@ def top_ngram_frac(col: Column | str, n: int = 2) -> Column:
     filters drop before training.
 
     Whole expression is a JVM higher-order fold over the per-row
-    shingle array: O(distinct × total) per doc, zero shuffle, codegen'd
-    — per-doc work, never cross-doc.
+    shingle array (interpreted, zero shuffle) — per-doc work, never
+    cross-doc.
     """
     sh = shingles(col, n)
     # Longest equal-run over the SORTED shingle array = max frequency.

@@ -66,20 +66,12 @@ def default_weights_millis(dim: int, seed: int = 0) -> list[int]:
 def hashed_features(col: Column | str) -> Column:
     """Unigram + bigram string features of whitespace tokens."""
     toks = TX.tokens(col)
-    n = F.size(toks)
-    bigrams = F.when(
-        n >= 2,
-        F.transform(
-            F.sequence(F.lit(1), n - 1),
-            lambda i: F.concat_ws(" ", F.element_at(toks, i), F.element_at(toks, i + 1)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
     # NULL text must yield an EMPTY feature list, not NULL: the inline
     # fold and the weight-table explode_outer path must both score
     # bias-only on NULL/empty docs (ADVICE r2 — a NULL here made the
     # inline logit NULL while the join path scored bias_millis).
     return F.coalesce(
-        F.concat(toks, bigrams), F.array().cast("array<string>")
+        F.concat(toks, TX.ngrams(toks, 2)), F.array().cast("array<string>")
     )
 
 

@@ -6,7 +6,9 @@ All variants are expressed as shuffle-conscious DataFrame plans:
   minimal possible shuffle; at 100 TB the group key is a 60-bit hash,
   not the full document, so shuffle payload stays small.
 - **MinHash + LSH**: signatures computed scan-side with built-in
-  higher-order functions (no Python), then a band-bucket shuffle whose
+  higher-order functions (no Python; HOFs are ``CodegenFallback`` and
+  run interpreted, so per-row shingling must stay linear — see
+  ``functions.text``), then a band-bucket shuffle whose
   key cardinality (~n_docs × bands) keeps the self-join linear-ish;
   candidate pairs are verified on estimated Jaccard from the full
   signature. This is the scale path: brute-force pairwise never runs.
@@ -253,7 +255,7 @@ def minhash_lsh_pairs(
 ) -> DataFrame:
     """Near-duplicate pairs via banded MinHash-LSH.
 
-    Plan shape: signature (scan-side, codegen) → explode bands →
+    Plan shape: signature (scan-side, interpreted HOFs) → explode bands →
     shuffle on (band, band-signature) → within-bucket self-join →
     distinct pairs → verify estimated Jaccard (= fraction of equal
     signature slots) ≥ threshold. Output: (id_a, id_b, est_jaccard)

@@ -36,7 +36,7 @@ tokens, so accumulated error ≪ 1e-6).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from bergloom_spark.functions import text as TX
@@ -184,22 +184,16 @@ def bigram_logprob(
     hash join on (prev, cur) planned by AQE, the standard layout for
     n-gram LM scoring at scale).
     """
-    toks = TX.tokens(text_col)
-    n = F.size(toks)
+    def transitions(toks: Column) -> Column:
+        return F.zip_with(
+            *TX.shifted_slices(toks, 2),
+            lambda a, b: F.struct(a.alias("prev"), b.alias("cur")),
+        )
+
+    # NULL text gives a NULL array, which explodes to no rows like [].
     trans = df.select(
         F.col(id_col).alias("__id"),
-        F.explode(
-            F.when(
-                n >= 2,
-                F.transform(
-                    F.sequence(F.lit(2), n),
-                    lambda i: F.struct(
-                        F.element_at(toks, i - 1).alias("prev"),
-                        F.element_at(toks, i).alias("cur"),
-                    ),
-                ),
-            ).otherwise(F.array().cast("array<struct<prev:string,cur:string>>"))
-        ).alias("__t"),
+        F.explode(TX.let(TX.tokens(text_col), transitions)).alias("__t"),
     ).select("__id", F.col("__t.prev").alias("prev"), F.col("__t.cur").alias("cur"))
 
     big = trans.groupBy("prev", "cur").agg(F.count("*").alias("__cb"))

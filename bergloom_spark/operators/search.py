@@ -324,9 +324,9 @@ def keyword_tag_counts(
     Matching is whitespace-token-aligned and overlapping occurrences
     count (each n-gram start position is tested independently).
 
-    Scale shape: phrases ride the plan as literals and every tag's
-    count folds over the SAME shared n-gram arrays in one codegen map
-    pass — zero shuffles, zero Python. Right for bounded dictionaries
+    Scale shape: phrases ride the plan as literals and each phrase
+    counts over its length's n-gram array (``TX.ngrams``, linear in
+    tokens) in one map pass — zero shuffles, zero Python. Right for bounded dictionaries
     (10²-10⁴ phrases); a 10⁶-phrase dictionary wants the explode +
     broadcast-join layout of ``classifier.score_with_weight_table``
     instead.
@@ -336,27 +336,18 @@ def keyword_tag_counts(
         {len(p.split()) for phrases in tags.values() for p in phrases}
     )
 
-    # Single-arg closures: a bound-default second parameter would make
+    # Single-arg closure: a bound-default second parameter would make
     # Spark pass the (element, index) HOF form and bind the index over
     # the default.
-    def _gram_fn(length):
-        return lambda i: F.concat_ws(" ", F.slice(toks, i, length))
-
     def _eq_fn(phrase):
         return lambda x: x == F.lit(phrase)
 
-    grams = {}
-    for length in lengths:
-        if length == 1:
-            grams[length] = toks
-        else:
-            n = F.size(toks)
-            grams[length] = F.when(
-                n >= length,
-                F.transform(
-                    F.sequence(F.lit(1), n - (length - 1)), _gram_fn(length)
-                ),
-            ).otherwise(F.array().cast("array<string>"))
+    # Unigrams are the tokens themselves: NULL text keeps a NULL count
+    # for a tag with a one-token phrase, as in the DuckDB twin.
+    grams = {
+        length: toks if length == 1 else TX.ngrams(toks, length)
+        for length in lengths
+    }
     cols = [F.col(id_col).alias("doc_id")]
     for tag, phrases in tags.items():
         total = None
