@@ -32,8 +32,8 @@ Three implementations, all testable in-sandbox:
   Postgres/MySQL in production); CAS is a rowcount-checked UPDATE,
   atomic across processes.
 
-Concurrency contract (mirrors ``RewriteFilesCommitManager``): a
-committer resolves the current location, prepares a new tree, then
+Concurrency contract (mirrors the native lake's ``lake/commit.commit``):
+a committer resolves the current location, prepares a new tree, then
 ``commit_swap(ident, new, expected=current)``. If another committer
 landed in between, the CAS raises :class:`CatalogCommitConflict`
 and the caller re-resolves, re-validates, and retries — the same
@@ -195,7 +195,7 @@ class FilesystemCatalog(Catalog):
 
     Commit = ``publish_if_absent`` of the next version file (the
     single CAS primitive shared with the native lake's
-    ``write_version``, ``lake/metadata.py:155``); the hint is
+    ``write_version``, ``lake/metadata.py:173``); the hint is
     rewritten after and is ONLY a hint — resolution falls back to
     scanning for the max committed version, so a crash between CAS
     and hint write loses nothing.

@@ -1,15 +1,23 @@
-"""RewriteFiles commit manager with optimistic retry.
+"""The one retrying commit primitive every lake mutation goes through.
 
 Reference: ``RewriteDataFilesCommitManager``
-(``core/src/compaction/mod.rs:465-614``): reload the table, guard on
-schema id, build a RewriteFiles transaction (remove old files, add new
-ones pinned to the *starting* snapshot's sequence number so
-younger-than-compaction deletes still apply), commit with exponential
-backoff on retryable conflicts.
+(``core/src/compaction/mod.rs:465-614``): a commit is one transaction
+— reload the base, validate it, build the new state, CAS it into the
+version chain, and retry with exponential backoff on a lost race.
+:func:`commit` is that loop; callers supply only a pure
+``update(base) -> TableMetadata`` that re-runs its validations against
+whatever base it is handed (raising :class:`CommitFailed` when one no
+longer holds). :func:`with_snapshot` builds the new state for every
+file-level commit (appends, deletes, merges, staged appends and
+rewrites), and :class:`RewriteFilesCommitManager` is the RewriteFiles
+transaction: guard on schema id, remove old files, add new ones pinned
+to the *starting* snapshot's sequence number so younger-than-compaction
+deletes still apply.
 """
 
 from __future__ import annotations
 
+import dataclasses
 import random
 import time
 from dataclasses import dataclass
@@ -37,6 +45,88 @@ class RetryConfig:
             initial_delay_s=config.retry_initial_delay_s,
             max_delay_s=config.retry_max_delay_s,
         )
+
+
+# Every commit except compaction's: 5 retries, 50 ms → 200 ms, so at
+# most 0.75 s of backoff before a lost race surfaces.
+COMMIT_RETRY = RetryConfig(max_retries=5, initial_delay_s=0.05, max_delay_s=0.2)
+
+
+def commit(
+    table_root: str,
+    update,
+    *,
+    base: md.TableMetadata | None = None,
+    retry: RetryConfig,
+    sleep=time.sleep,
+) -> md.TableMetadata:
+    """Publish ``update(base)`` as the next metadata version.
+
+    ``base`` (e.g. a handle's cached metadata) is used for the first
+    attempt; when None, and after every lost CAS, the base is reloaded
+    from storage. ``update`` must be pure: it sees a fresh base on each
+    attempt and never mutates it. The version number is set here."""
+    attempt = 0
+    while True:
+        if base is None:
+            base = md.read_current(table_root)
+        meta = dataclasses.replace(update(base), version=base.version + 1)
+        try:
+            md.write_version(meta)
+            return meta
+        except md.CommitConflict:
+            if attempt >= retry.max_retries:
+                raise
+            sleep(
+                min(retry.initial_delay_s * 2**attempt, retry.max_delay_s)
+                * (0.5 + random.random() / 2)
+            )
+            attempt += 1
+            base = None
+
+
+def with_snapshot(
+    base: md.TableMetadata,
+    operation: str,
+    entries: list[md.ManifestEntry],
+    *,
+    remove: set[str] = frozenset(),
+    entry_sequence_number: int | None = None,
+    properties: dict[str, str] | None = None,
+    staged: bool = False,
+) -> md.TableMetadata:
+    """``base`` plus one snapshot: the current live files minus
+    ``remove``, plus copies of ``entries`` stamped with
+    ``entry_sequence_number`` (default: the new snapshot's).
+    ``properties`` merge into the table's in the same commit. A
+    ``staged`` snapshot (write-audit-publish) is recorded but the
+    table keeps pointing at its parent."""
+    seq = base.last_sequence_number + 1
+    snapshot_id = base.last_snapshot_id + 1
+    stamp = seq if entry_sequence_number is None else entry_sequence_number
+    current = base.current_snapshot()
+    snap = md.Snapshot(
+        snapshot_id=snapshot_id,
+        sequence_number=seq,
+        timestamp_ms=int(time.time() * 1000),
+        operation=operation,
+        entries=[
+            e for e in (current.entries if current else [])
+            if e.file_path not in remove
+        ]
+        + [dataclasses.replace(e, sequence_number=stamp) for e in entries],
+        parent_snapshot_id=base.current_snapshot_id,
+    )
+    return dataclasses.replace(
+        base,
+        properties={**base.properties, **(properties or {})},
+        current_snapshot_id=(
+            base.current_snapshot_id if staged else snapshot_id
+        ),
+        last_sequence_number=seq,
+        last_snapshot_id=snapshot_id,
+        snapshots=base.snapshots + [snap],
+    )
 
 
 class RewriteFilesCommitManager:
@@ -77,126 +167,58 @@ class RewriteFilesCommitManager:
         since the overwrite was planned), the commit FAILS instead of
         silently keeping rows the caller believes replaced — the
         caller must re-plan against the new state."""
-        attempt = 0
-        while True:
-            try:
-                return self._try_commit(
-                    add_entries,
-                    remove_paths,
-                    operation,
-                    overwritten_partitions,
-                    set_properties,
-                )
-            except md.CommitConflict:
-                if attempt >= self.retry.max_retries:
-                    raise
-                delay = min(
-                    self.retry.initial_delay_s * (2**attempt),
-                    self.retry.max_delay_s,
-                ) * (0.5 + random.random() / 2)
-                self._sleep(delay)
-                attempt += 1
 
-    def _try_commit(
-        self,
-        add_entries: list[md.ManifestEntry],
-        remove_paths: set[str],
-        operation: str = "rewrite",
-        overwritten_partitions: set[tuple] | None = None,
-        set_properties: dict[str, str] | None = None,
-    ) -> md.TableMetadata:
-        base = md.read_current(self.table_root)
-        # Schema-id guard: abort if the table schema changed mid-compaction
-        # (compaction/mod.rs:532-541).
-        if base.schema_id != self.starting_schema_id:
-            raise CommitFailed(
-                f"schema changed during compaction: "
-                f"{self.starting_schema_id} -> {base.schema_id}"
-            )
-        current = base.current_snapshot()
-        live = list(current.entries) if current else []
-        live_paths = {e.file_path for e in live}
-        missing = remove_paths - live_paths
-        if missing:
-            raise CommitFailed(
-                f"{len(missing)} input files no longer live (concurrent rewrite?)"
-            )
-        if overwritten_partitions is not None:
-            conflicting = [
-                e
-                for e in live
-                if e.content == md.DATA
-                and tuple(sorted(e.partition.items()))
-                in overwritten_partitions
-                and e.file_path not in remove_paths
-            ]
-            if conflicting:
+        def update(base: md.TableMetadata) -> md.TableMetadata:
+            # Schema-id guard: abort if the table schema changed
+            # mid-compaction (compaction/mod.rs:532-541).
+            if base.schema_id != self.starting_schema_id:
                 raise CommitFailed(
-                    f"{len(conflicting)} data files were committed "
-                    "concurrently into partitions this overwrite "
-                    "replaces; re-plan the overwrite against the "
-                    "current snapshot"
+                    f"schema changed during compaction: "
+                    f"{self.starting_schema_id} -> {base.schema_id}"
                 )
-        # Pin output data files to the starting sequence number so delete
-        # files committed *after* compaction started still apply to the
-        # rewritten rows (compaction/mod.rs:546-566).
-        seq = (
-            self.starting_sequence_number
-            if self.use_starting_sequence_number
-            else base.last_sequence_number + 1
-        )
-        adds = [
-            md.ManifestEntry(
-                content=e.content,
-                file_path=e.file_path,
-                record_count=e.record_count,
-                file_size_bytes=e.file_size_bytes,
-                sequence_number=seq,
-                equality_ids=list(e.equality_ids),
-                partition=dict(e.partition),
-                column_stats=dict(e.column_stats),
-                column_blooms=dict(getattr(e, "column_blooms", {}) or {}),
-                column_value_counts=dict(
-                    getattr(e, "column_value_counts", {}) or {}
+            current = base.current_snapshot()
+            live = current.entries if current else []
+            missing = remove_paths - {e.file_path for e in live}
+            if missing:
+                raise CommitFailed(
+                    f"{len(missing)} input files no longer live "
+                    "(concurrent rewrite?)"
+                )
+            if overwritten_partitions is not None:
+                conflicting = [
+                    e
+                    for e in live
+                    if e.content == md.DATA
+                    and tuple(sorted(e.partition.items()))
+                    in overwritten_partitions
+                    and e.file_path not in remove_paths
+                ]
+                if conflicting:
+                    raise CommitFailed(
+                        f"{len(conflicting)} data files were committed "
+                        "concurrently into partitions this overwrite "
+                        "replaces; re-plan the overwrite against the "
+                        "current snapshot"
+                    )
+            # Pin output data files to the starting sequence number so
+            # delete files committed *after* compaction started still
+            # apply to the rewritten rows (compaction/mod.rs:546-566).
+            # set_properties rides the SAME CAS as the file rewrite (a
+            # sorted compaction's sort-order claim must land with the
+            # sorted files or not at all, r14).
+            return with_snapshot(
+                base,
+                operation,
+                add_entries,
+                remove=remove_paths,
+                entry_sequence_number=(
+                    self.starting_sequence_number
+                    if self.use_starting_sequence_number
+                    else None
                 ),
-                column_null_counts=dict(
-                    getattr(e, "column_null_counts", {}) or {}
-                ),
-                column_buckets=dict(
-                    getattr(e, "column_buckets", {}) or {}
-                ),
-                # deletion-vector fields (r14): dropping them here
-                # would silently turn a DV entry into a "parquet
-                # pos-delete" pointing at a Puffin file
-                dv_referenced_file=getattr(e, "dv_referenced_file", None),
-                dv_offset=getattr(e, "dv_offset", None),
-                dv_size=getattr(e, "dv_size", None),
+                properties=set_properties,
             )
-            for e in add_entries
-        ]
-        snap = md.Snapshot(
-            snapshot_id=base.last_snapshot_id + 1,
-            sequence_number=base.last_sequence_number + 1,
-            timestamp_ms=int(time.time() * 1000),
-            operation=operation,
-            entries=[e for e in live if e.file_path not in remove_paths] + adds,
-            parent_snapshot_id=base.current_snapshot_id,
+
+        return commit(
+            self.table_root, update, retry=self.retry, sleep=self._sleep
         )
-        meta = md.TableMetadata(
-            table_root=base.table_root,
-            schema=base.schema,
-            schema_id=base.schema_id,
-            partition_spec=list(base.partition_spec),
-            # set_properties rides the SAME CAS as the file rewrite
-            # (a sorted compaction's sort-order claim must land with
-            # the sorted files or not at all, r14)
-            properties={**base.properties, **(set_properties or {})},
-            refs=dict(base.refs),
-            current_snapshot_id=snap.snapshot_id,
-            last_sequence_number=snap.sequence_number,
-            last_snapshot_id=snap.snapshot_id,
-            version=base.version + 1,
-            snapshots=list(base.snapshots) + [snap],
-        )
-        md.write_version(meta)
-        return meta

@@ -14,6 +14,7 @@ Reference: ``Compaction::{compact,full_compact}``
 
 from __future__ import annotations
 
+import dataclasses
 import os
 import time
 from dataclasses import dataclass, field
@@ -130,14 +131,13 @@ class Compaction:
         )
         commit_start = time.monotonic()
         try:
-            manager.rewrite_files(add_entries, remove_paths)
+            table.meta = manager.rewrite_files(add_entries, remove_paths)
         except Exception:
             metrics.compaction_commit_failed_counter += 1
             raise
         metrics.compaction_commit_counter += 1
         metrics.compaction_commit_duration.observe(time.monotonic() - commit_start)
 
-        table.refresh()
         result = CompactionResult(
             stat=RewriteFilesStat(
                 rewritten_files_count=len(old_entries),
@@ -293,8 +293,7 @@ class BinpackCompaction(Compaction):
             use_starting_sequence_number=self.config.use_starting_sequence_number,
             retry=RetryConfig.from_compaction(self.config),
         )
-        manager.rewrite_files(add_entries, remove_paths)
-        table.refresh()
+        table.meta = manager.rewrite_files(add_entries, remove_paths)
         return CompactionResult(
             stat=RewriteFilesStat(
                 rewritten_files_count=len(selected),
@@ -432,7 +431,7 @@ class SortCompaction(Compaction):
         # clustering (verdict r13 Missing #4).
         import json as _json
 
-        manager.rewrite_files(
+        table.meta = manager.rewrite_files(
             add_entries, remove_paths,
             set_properties={
                 "sort_order": _json.dumps({
@@ -441,7 +440,6 @@ class SortCompaction(Compaction):
                 })
             },
         )
-        table.refresh()
         return CompactionResult(
             stat=RewriteFilesStat(
                 rewritten_files_count=len(old_entries),
@@ -520,8 +518,7 @@ def rewrite_position_deletes(
         use_starting_sequence_number=config.use_starting_sequence_number,
         retry=RetryConfig.from_compaction(config),
     )
-    manager.rewrite_files(add_entries, remove_paths)
-    table.refresh()
+    table.meta = manager.rewrite_files(add_entries, remove_paths)
     return CompactionResult(
         stat=RewriteFilesStat(
             rewritten_files_count=len(pos_entries) + len(dangling_eq),
@@ -589,8 +586,7 @@ def rewrite_deletes_to_vectors(
         use_starting_sequence_number=config.use_starting_sequence_number,
         retry=RetryConfig.from_compaction(config),
     )
-    manager.rewrite_files(add_entries, remove_paths)
-    table.refresh()
+    table.meta = manager.rewrite_files(add_entries, remove_paths)
     return CompactionResult(
         stat=RewriteFilesStat(
             rewritten_files_count=len(pos_entries),
@@ -644,17 +640,9 @@ def remove_orphan_files(
     return removed
 
 
-def expire_snapshots(table: LakeTable, keep_last: int = 1) -> int:
-    """Drop old snapshot metadata (compaction/mod.rs:354-360).
-
-    Data files referenced only by expired snapshots are deleted from
-    disk. Returns the number of expired snapshots.
-    """
-    import os
-
-    meta = table.refresh().meta
-    if len(meta.snapshots) <= keep_last:
-        return 0
+def _expired(meta: md.TableMetadata, keep_last: int) -> list[md.Snapshot]:
+    """Snapshots ``expire_snapshots`` drops from ``meta``: all but the
+    newest ``keep_last``, the current one and every ref's target."""
     kept_ids = {s.snapshot_id for s in meta.snapshots[-keep_last:]}
     # The current snapshot must survive regardless of its position —
     # after rollback_to it may not be among the newest keep_last.
@@ -664,19 +652,35 @@ def expire_snapshots(table: LakeTable, keep_last: int = 1) -> int:
     # release stays readable until the tag is dropped, no matter how
     # aggressive the expiry policy.
     kept_ids.update(r["snapshot_id"] for r in meta.refs.values())
-    kept = [s for s in meta.snapshots if s.snapshot_id in kept_ids]
-    expired = [s for s in meta.snapshots if s.snapshot_id not in kept_ids]
-    if not expired:
+    return [s for s in meta.snapshots if s.snapshot_id not in kept_ids]
+
+
+def expire_snapshots(table: LakeTable, keep_last: int = 1) -> int:
+    """Drop old snapshot metadata (compaction/mod.rs:354-360).
+
+    Data files referenced only by expired snapshots are deleted from
+    disk. Returns the number of expired snapshots.
+    """
+    if not _expired(table.refresh().meta, keep_last):
         return 0
-    live_paths = {e.file_path for s in kept for e in s.entries}
+    expired: list[md.Snapshot] = []
+
+    def update(base: md.TableMetadata) -> md.TableMetadata:
+        expired[:] = _expired(base, keep_last)
+        gone = {s.snapshot_id for s in expired}
+        return dataclasses.replace(
+            base,
+            snapshots=[s for s in base.snapshots if s.snapshot_id not in gone],
+        )
+
+    meta = table._commit(update)
+    live_paths = {e.file_path for s in meta.snapshots for e in s.entries}
     # Only delete files THIS table owns (under its root). A shallow
     # clone (LakeTable.clone_to) carries the SOURCE's absolute paths in
     # its manifests; after a rewrite on the clone those borrowed files
     # become "dead" in the clone's metadata, but physically deleting
     # them would corrupt the source table, which still references them.
     # Borrowed entries are dropped from the clone's metadata only.
-    from bergloom_spark.lake.fileio import strip_local_scheme
-
     root = os.path.abspath(strip_local_scheme(meta.table_root)) + os.sep
     dead_paths = {
         p
@@ -685,21 +689,6 @@ def expire_snapshots(table: LakeTable, keep_last: int = 1) -> int:
         )
         if os.path.abspath(p).startswith(root)
     }
-    new_meta = md.TableMetadata(
-        table_root=meta.table_root,
-        schema=meta.schema,
-        schema_id=meta.schema_id,
-        partition_spec=list(meta.partition_spec),
-        properties=dict(meta.properties),
-        refs=dict(meta.refs),
-        current_snapshot_id=meta.current_snapshot_id,
-        last_sequence_number=meta.last_sequence_number,
-        last_snapshot_id=meta.last_snapshot_id,
-        version=meta.version + 1,
-        snapshots=kept,
-    )
-    md.write_version(new_meta)
-    table.meta = new_meta
     for path in dead_paths:
         if os.path.exists(path):
             os.unlink(path)

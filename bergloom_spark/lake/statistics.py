@@ -29,6 +29,7 @@ property carries it).
 
 from __future__ import annotations
 
+import dataclasses
 import json
 import os
 import struct
@@ -211,38 +212,19 @@ def compute_table_statistics(
             "statistics_snapshot_id": str(snap.snapshot_id),
         },
     )
-    table.refresh()
     return path
 
 
 def _commit_properties(table, props: dict[str, str]) -> None:
     """Snapshot-LESS property commit (Iceberg's UpdateProperties:
     properties changes never create snapshots — a stats pointer that
-    bumped the snapshot would make itself stale). Same version-file
-    CAS as every commit; lost races re-read and re-apply."""
-    from bergloom_spark.lake import metadata as md
-
-    for _ in range(5):
-        base = md.read_current(table.meta.table_root)
-        meta = md.TableMetadata(
-            table_root=base.table_root,
-            schema=base.schema,
-            schema_id=base.schema_id,
-            partition_spec=list(base.partition_spec),
-            properties={**base.properties, **props},
-            refs=dict(base.refs),
-            current_snapshot_id=base.current_snapshot_id,
-            last_sequence_number=base.last_sequence_number,
-            last_snapshot_id=base.last_snapshot_id,
-            version=base.version + 1,
-            snapshots=list(base.snapshots),
+    bumped the snapshot would make itself stale). Same retrying
+    version-file CAS as every commit; ``table`` adopts the result."""
+    table._commit(
+        lambda base: dataclasses.replace(
+            base, properties={**base.properties, **props}
         )
-        try:
-            md.write_version(meta)
-            return
-        except md.CommitConflict:
-            continue
-    raise md.CommitConflict("statistics: property commit lost 5 races")
+    )
 
 
 def compute_partition_statistics(table) -> str:
@@ -318,7 +300,6 @@ def compute_partition_statistics(table) -> str:
             "partition_statistics_snapshot_id": str(snap.snapshot_id),
         },
     )
-    table.refresh()
     return path
 
 

@@ -11,6 +11,7 @@ sequence number (equality) or by exact ``(file_path, pos)`` match
 
 from __future__ import annotations
 
+import dataclasses
 import re
 import time
 
@@ -21,6 +22,13 @@ from pyspark.sql import types as T
 from bergloom_spark.lake import metadata as md
 from bergloom_spark.lake import skipping as sk
 from bergloom_spark.lake import writer as wr
+from bergloom_spark.lake.commit import (
+    COMMIT_RETRY,
+    CommitFailed,
+    RewriteFilesCommitManager,
+    commit,
+    with_snapshot,
+)
 from bergloom_spark.operators import mor
 
 
@@ -121,6 +129,35 @@ def _uri_path_map(df: DataFrame, expected_paths: list[str]) -> dict[str, str] | 
     return mapping
 
 
+def _live_data_paths(meta: md.TableMetadata) -> set[str]:
+    snap = meta.current_snapshot()
+    return {e.file_path for e in snap.files(md.DATA)} if snap else set()
+
+
+def _refuse_referenced(snap: md.Snapshot | None, names) -> None:
+    """ValueError if a live file still needs any of ``names`` under
+    its current name: a data file that virtualizes it into its
+    partition dir (after partition evolution the scan group needs it
+    in the schema to recover values) or an equality-delete file keyed
+    on it."""
+    if snap is None:
+        return
+    virtual = {c for e in snap.files(md.DATA) for c in e.partition}
+    still_virtual = [n for n in names if n in virtual]
+    if still_virtual:
+        raise ValueError(
+            f"columns virtualized in live data files (compact to the "
+            f"current spec first): {still_virtual}"
+        )
+    referenced = {c for e in snap.files(md.EQ_DELETE) for c in e.equality_ids}
+    blocked = [n for n in names if n in referenced]
+    if blocked:
+        raise ValueError(
+            f"columns referenced by live equality-delete files "
+            f"(compact first): {blocked}"
+        )
+
+
 class LakeTable:
     def __init__(self, spark: SparkSession, meta: md.TableMetadata):
         self.spark = spark
@@ -170,129 +207,64 @@ class LakeTable:
         return T.StructType.fromJson(self.meta.schema)
 
     # ------------------------------------------------------------------
-    # commits (append paths used by tests/fixtures; rewrite lives in
-    # commit.py with the retry machinery)
+    # commits: every mutation is a pure update handed to commit.commit
     # ------------------------------------------------------------------
-    def _next_commit(
-        self, operation: str, staged: bool = False
-    ) -> tuple[md.TableMetadata, md.Snapshot]:
-        base = self.meta
-        snap = md.Snapshot(
-            snapshot_id=base.last_snapshot_id + 1,
-            sequence_number=base.last_sequence_number + 1,
-            timestamp_ms=int(time.time() * 1000),
-            operation=operation,
-            entries=[],
-            parent_snapshot_id=base.current_snapshot_id,
-        )
-        meta = md.TableMetadata(
-            table_root=base.table_root,
-            schema=base.schema,
-            schema_id=base.schema_id,
-            partition_spec=list(base.partition_spec),
-            properties=dict(base.properties),
-            refs=dict(base.refs),
-            # Staged (write-audit-publish): the snapshot is recorded but
-            # the table keeps pointing at its parent until publish().
-            current_snapshot_id=(
-                base.current_snapshot_id if staged else snap.snapshot_id
-            ),
-            last_sequence_number=snap.sequence_number,
-            last_snapshot_id=snap.snapshot_id,
-            version=base.version + 1,
-            snapshots=list(base.snapshots) + [snap],
-        )
-        return meta, snap
+    def _commit(self, update) -> md.TableMetadata:
+        """Commit ``update`` (base → new metadata) with the shared
+        retry policy, starting from this handle's cached metadata, and
+        adopt the result."""
+        with self._commit_lock:
+            self.meta = commit(
+                self.meta.table_root, update, base=self.meta,
+                retry=COMMIT_RETRY,
+            )
+            return self.meta
 
-    def _carry_forward(self, snap: md.Snapshot) -> None:
-        """New snapshot inherits the previous snapshot's live files."""
-        current = self.meta.current_snapshot()
-        if current is not None:
-            snap.entries.extend(current.entries)
-
-    def _commit_with_retry(
+    def _commit_files(
         self,
         operation: str,
-        new_entries: list,
+        entries: list[md.ManifestEntry],
         properties_update: dict[str, str] | None = None,
-        max_retries: int = 5,
+        staged: bool = False,
     ) -> md.Snapshot:
         """Optimistic-retry commit of ALREADY-WRITTEN files (the
         reference's retry semantics, compaction/mod.rs:595-611,
         generalized to DML): on a version-CAS conflict the parquet is
-        NOT rewritten — the snapshot is rebuilt against the refreshed
+        NOT rewritten — the snapshot is rebuilt against the reloaded
         base (new id/sequence number, entries re-stamped, live files
-        re-carried) and the CAS retried with jittered backoff.
+        re-carried) and the CAS retried with backoff.
 
         Isolation is snapshot-level (Iceberg's default): a retried
         delta commit lands AFTER concurrent appends, so its equality
         deletes shadow them too. POSITIONAL deletes can't be re-based
         that way — their (file, pos) pairs are meaningless against
         rewritten files — so if any data file live at build time
-        vanished from the refreshed base, the retry raises
+        vanished from the reloaded base, the retry raises
         CommitFailed and the caller must re-run the delete."""
         if properties_update and SORT_ORDER_PROP in properties_update:
             # Validate at the write site — a typo'd column would
             # otherwise commit cleanly and then fail every later
             # maintenance run far from its cause.
             parse_sort_order(properties_update[SORT_ORDER_PROP], self.schema)
-        has_pos = any(e.content == md.POS_DELETE for e in new_entries)
-        with self._commit_lock:
-            return self._commit_locked(
-                operation, new_entries, properties_update, max_retries,
-                has_pos,
+        planned = (
+            _live_data_paths(self.meta)
+            if any(e.content == md.POS_DELETE for e in entries)
+            else set()
+        )
+
+        def update(base: md.TableMetadata) -> md.TableMetadata:
+            if not planned <= _live_data_paths(base):
+                raise CommitFailed(
+                    "concurrent rewrite removed data files this "
+                    "positional-delete commit references; re-run "
+                    "the delete against the current snapshot"
+                )
+            return with_snapshot(
+                base, operation, entries, properties=properties_update,
+                staged=staged,
             )
 
-    def _commit_locked(
-        self,
-        operation: str,
-        new_entries: list,
-        properties_update: dict[str, str] | None,
-        max_retries: int,
-        has_pos: bool,
-    ) -> md.Snapshot:
-        import random as _random
-
-        from bergloom_spark.lake.commit import CommitFailed
-
-        cur = self.meta.current_snapshot()
-        base_data = {
-            e.file_path
-            for e in (cur.entries if cur is not None else [])
-            if e.content == md.DATA
-        }
-        attempt = 0
-        while True:
-            meta, snap = self._next_commit(operation)
-            if properties_update:
-                meta.properties.update(properties_update)
-            self._carry_forward(snap)
-            if attempt and has_pos:
-                live = {
-                    e.file_path
-                    for e in snap.entries
-                    if e.content == md.DATA
-                }
-                if not base_data <= live:
-                    raise CommitFailed(
-                        "concurrent rewrite removed data files this "
-                        "positional-delete commit references; re-run "
-                        "the delete against the current snapshot"
-                    )
-            for e in new_entries:
-                e.sequence_number = snap.sequence_number
-            snap.entries.extend(new_entries)
-            try:
-                md.write_version(meta)
-            except md.CommitConflict:
-                attempt += 1
-                if attempt > max_retries:
-                    raise
-                time.sleep(_random.uniform(0.0, 0.05 * attempt))
-                self.refresh()
-                continue
-            self.meta = meta
-            return snap
+        return self._commit(update).snapshots[-1]
 
     def append(
         self,
@@ -312,7 +284,7 @@ class LakeTable:
             partition_spec=self.meta.partition_spec or None,
             bloom_cols=self.bloom_cols(pending=properties_update),
         )
-        return self._commit_with_retry("append", entries, properties_update)
+        return self._commit_files("append", entries, properties_update)
 
     def stage_append(
         self, df: DataFrame, target_file_size: int = 128 * 1024 * 1024
@@ -322,21 +294,15 @@ class LakeTable:
         ``read(snapshot_id=...)``, then :meth:`publish` it (or leave it
         for ``expire_snapshots`` to reap). Files are fully written and
         durable — publish is a metadata flip."""
-        meta, snap = self._next_commit("stage-append", staged=True)
-        self._carry_forward(snap)
-        snap.entries.extend(
-            wr.write_data_files(
-                df,
-                self.meta.table_root,
-                snap.sequence_number,
-                target_file_size,
-                partition_spec=self.meta.partition_spec or None,
-                bloom_cols=self.bloom_cols(),
-            )
+        entries = wr.write_data_files(
+            df,
+            self.meta.table_root,
+            self.meta.last_sequence_number + 1,
+            target_file_size,
+            partition_spec=self.meta.partition_spec or None,
+            bloom_cols=self.bloom_cols(),
         )
-        md.write_version(meta)
-        self.meta = meta
-        return snap
+        return self._commit_files("stage-append", entries, staged=True)
 
     def publish(self, snapshot_id: int) -> None:
         """Write-audit-publish step 3: make a staged snapshot current.
@@ -346,38 +312,25 @@ class LakeTable:
         files, so publishing over a newer state would silently drop the
         intervening commits. Re-stage on top of the new current instead.
         """
-        from bergloom_spark.lake.commit import CommitFailed
 
-        base = self.meta
-        snap = base.snapshot_by_id(snapshot_id)
-        if snap.parent_snapshot_id != base.current_snapshot_id:
-            raise CommitFailed(
-                f"staged snapshot {snapshot_id} was built on "
-                f"{snap.parent_snapshot_id}, but current is "
-                f"{base.current_snapshot_id}; re-stage and retry"
-            )
-        meta = md.TableMetadata(
-            table_root=base.table_root,
-            schema=base.schema,
-            schema_id=base.schema_id,
-            partition_spec=list(base.partition_spec),
-            properties=dict(base.properties),
-            refs=dict(base.refs),
-            current_snapshot_id=snapshot_id,
-            last_sequence_number=base.last_sequence_number,
-            last_snapshot_id=base.last_snapshot_id,
-            version=base.version + 1,
-            snapshots=list(base.snapshots),
-        )
-        md.write_version(meta)
-        self.meta = meta
+        def update(base: md.TableMetadata) -> md.TableMetadata:
+            snap = base.snapshot_by_id(snapshot_id)
+            if snap.parent_snapshot_id != base.current_snapshot_id:
+                raise CommitFailed(
+                    f"staged snapshot {snapshot_id} was built on "
+                    f"{snap.parent_snapshot_id}, but current is "
+                    f"{base.current_snapshot_id}; re-stage and retry"
+                )
+            return dataclasses.replace(base, current_snapshot_id=snapshot_id)
+
+        self._commit(update)
 
     def append_position_deletes(self, df: DataFrame) -> md.Snapshot:
         """``df``: (file_path string, pos long) rows to delete."""
         entries = wr.write_position_delete_files(
             df, self.meta.table_root, self.meta.last_sequence_number + 1
         )
-        return self._commit_with_retry("delete", entries)
+        return self._commit_files("delete", entries)
 
     def append_equality_deletes(
         self, df: DataFrame, equality_ids: list[str]
@@ -388,7 +341,7 @@ class LakeTable:
             self.meta.last_sequence_number + 1,
             equality_ids,
         )
-        return self._commit_with_retry("delete", entries)
+        return self._commit_files("delete", entries)
 
     # ------------------------------------------------------------------
     # snapshot management
@@ -396,14 +349,10 @@ class LakeTable:
     # ------------------------------------------------------------------
     # named refs (Iceberg-style tags & branches)
     # ------------------------------------------------------------------
-    def _commit_refs(self, refs: dict) -> None:
-        import dataclasses
-
-        meta = dataclasses.replace(
-            self.meta, refs=refs, version=self.meta.version + 1
-        )
-        md.write_version(meta)
-        self.meta = meta
+    def _commit_refs(self, refs_of) -> None:
+        """Commit ``refs_of(base)`` (validated against that base) as
+        the table's refs."""
+        self._commit(lambda base: dataclasses.replace(base, refs=refs_of(base)))
 
     def create_tag(self, name: str, snapshot_id: int | None = None) -> None:
         """Immutable named pointer to a snapshot (defaults to current) —
@@ -417,31 +366,42 @@ class LakeTable:
         self._create_ref(name, "branch", snapshot_id)
 
     def _create_ref(self, name: str, kind: str, snapshot_id: int | None) -> None:
-        if name in self.meta.refs:
-            raise ValueError(f"ref {name!r} already exists")
         if snapshot_id is None:
             snapshot_id = self.meta.current_snapshot_id
         if snapshot_id is None:
             raise ValueError("table has no snapshot to reference")
-        self.meta.snapshot_by_id(snapshot_id)  # KeyError if unknown
-        refs = dict(self.meta.refs)
-        refs[name] = {"snapshot_id": int(snapshot_id), "type": kind}
-        self._commit_refs(refs)
+
+        def refs_of(base: md.TableMetadata) -> dict:
+            if name in base.refs:
+                raise ValueError(f"ref {name!r} already exists")
+            base.snapshot_by_id(snapshot_id)  # KeyError if unknown
+            return {
+                **base.refs,
+                name: {"snapshot_id": int(snapshot_id), "type": kind},
+            }
+
+        self._commit_refs(refs_of)
 
     def set_branch(self, name: str, snapshot_id: int) -> None:
-        ref = self.meta.refs.get(name)
-        if ref is None or ref["type"] != "branch":
-            raise ValueError(f"{name!r} is not a branch")
-        self.meta.snapshot_by_id(snapshot_id)
-        refs = dict(self.meta.refs)
-        refs[name] = {"snapshot_id": int(snapshot_id), "type": "branch"}
-        self._commit_refs(refs)
+        def refs_of(base: md.TableMetadata) -> dict:
+            ref = base.refs.get(name)
+            if ref is None or ref["type"] != "branch":
+                raise ValueError(f"{name!r} is not a branch")
+            base.snapshot_by_id(snapshot_id)
+            return {
+                **base.refs,
+                name: {"snapshot_id": int(snapshot_id), "type": "branch"},
+            }
+
+        self._commit_refs(refs_of)
 
     def drop_ref(self, name: str) -> None:
-        if name not in self.meta.refs:
-            raise KeyError(f"ref {name!r} not found")
-        refs = {k: v for k, v in self.meta.refs.items() if k != name}
-        self._commit_refs(refs)
+        def refs_of(base: md.TableMetadata) -> dict:
+            if name not in base.refs:
+                raise KeyError(f"ref {name!r} not found")
+            return {k: v for k, v in base.refs.items() if k != name}
+
+        self._commit_refs(refs_of)
 
     def ref_snapshot_id(self, name: str) -> int:
         ref = self.meta.refs.get(name)
@@ -456,23 +416,12 @@ class LakeTable:
         ``expire_snapshots`` drops them, and sequence numbers keep
         increasing from where they were (a later re-append can never
         collide with the rolled-back commits)."""
-        base = self.meta
-        base.snapshot_by_id(snapshot_id)  # KeyError if unknown
-        meta = md.TableMetadata(
-            table_root=base.table_root,
-            schema=base.schema,
-            schema_id=base.schema_id,
-            partition_spec=list(base.partition_spec),
-            properties=dict(base.properties),
-            refs=dict(base.refs),
-            current_snapshot_id=snapshot_id,
-            last_sequence_number=base.last_sequence_number,
-            last_snapshot_id=base.last_snapshot_id,
-            version=base.version + 1,
-            snapshots=list(base.snapshots),
-        )
-        md.write_version(meta)
-        self.meta = meta
+
+        def update(base: md.TableMetadata) -> md.TableMetadata:
+            base.snapshot_by_id(snapshot_id)  # KeyError if unknown
+            return dataclasses.replace(base, current_snapshot_id=snapshot_id)
+
+        self._commit(update)
 
     def clone_to(self, new_root: str) -> "LakeTable":
         """Zero-copy (shallow) clone at the current snapshot — the
@@ -488,7 +437,6 @@ class LakeTable:
         cloned snapshot in the source, or expire conservatively.
         """
         import copy
-        import time as _time
 
         snap = self.meta.current_snapshot()
         entries = copy.deepcopy(snap.entries) if snap else []
@@ -497,7 +445,7 @@ class LakeTable:
             # Preserve sequence numbers: the carried entries' seq gates
             # (eq-delete visibility) must keep meaning what they meant.
             sequence_number=snap.sequence_number if snap else 0,
-            timestamp_ms=int(_time.time() * 1000),
+            timestamp_ms=int(time.time() * 1000),
             operation="clone",
             entries=entries,
             parent_snapshot_id=None,
@@ -735,37 +683,38 @@ class LakeTable:
     # its schema-id commit guard, compaction/mod.rs:532-541, is what
     # makes evolution safe against in-flight rewrites)
     # ------------------------------------------------------------------
-    def _evolve_schema(
+    def _evolve(
         self,
-        new_schema: T.StructType,
-        dropped: list[str],
-        extra_props: dict[str, str] | None = None,
+        properties: dict[str, str] | None = None,
+        unreferenced: tuple[str, ...] = (),
+        **changes,
     ) -> None:
-        """Metadata-only commit: same snapshots, new schema, schema_id+1.
-        Any compaction that started under the old schema_id aborts at
-        commit time via the schema guard."""
-        base = self.meta
-        props = dict(base.properties)
-        if dropped:
-            prev = [c for c in props.get("dropped_columns", "").split(",") if c]
-            props["dropped_columns"] = ",".join(prev + dropped)
-        if extra_props:
-            props.update(extra_props)
-        meta = md.TableMetadata(
-            table_root=base.table_root,
-            schema=new_schema.jsonValue(),
-            schema_id=base.schema_id + 1,
-            partition_spec=list(base.partition_spec),
-            properties=props,
-            refs=dict(base.refs),
-            current_snapshot_id=base.current_snapshot_id,
-            last_sequence_number=base.last_sequence_number,
-            last_snapshot_id=base.last_snapshot_id,
-            version=base.version + 1,
-            snapshots=list(base.snapshots),
-        )
-        md.write_version(meta)
-        self.meta = meta
+        """Metadata-only commit: same snapshots, ``changes`` applied,
+        ``properties`` merged, schema_id+1. The change was validated
+        against this handle's schema, so it commits only on that
+        schema id — a concurrent evolution raises CommitFailed instead
+        of being silently overwritten (the schema-id guard,
+        compaction/mod.rs:532-541). Any compaction that started under
+        the old schema_id likewise aborts at its commit guard.
+        ``unreferenced`` columns are re-checked against each base's
+        live files (:func:`_refuse_referenced`)."""
+        start = self.meta.schema_id
+
+        def update(base: md.TableMetadata) -> md.TableMetadata:
+            if base.schema_id != start:
+                raise CommitFailed(
+                    f"schema changed concurrently: {start} -> "
+                    f"{base.schema_id}; reload and re-apply"
+                )
+            _refuse_referenced(base.current_snapshot(), unreferenced)
+            return dataclasses.replace(
+                base,
+                schema_id=start + 1,
+                properties={**base.properties, **(properties or {})},
+                **changes,
+            )
+
+        self._commit(update)
 
     def add_columns(self, fields: list[T.StructField]) -> None:
         """Append nullable columns to the schema. Files written before
@@ -800,8 +749,8 @@ class LakeTable:
                 )
             if not f.nullable:
                 raise ValueError(f"new column must be nullable: {f.name}")
-        self._evolve_schema(
-            T.StructType(list(cur.fields) + list(fields)), dropped=[]
+        self._evolve(
+            schema=T.StructType(list(cur.fields) + list(fields)).jsonValue()
         )
 
     def _rename_history(self) -> dict[str, list[str]]:
@@ -861,24 +810,6 @@ class LakeTable:
             )
         if old in self.meta.partition_spec:
             raise ValueError(f"cannot rename partition column: {old}")
-        snap = self.meta.current_snapshot()
-        if snap is not None:
-            virtual = {
-                c for e in snap.files(md.DATA) for c in e.partition.keys()
-            }
-            if old in virtual:
-                raise ValueError(
-                    f"column virtualized in live data files (compact to the "
-                    f"current spec first): {old}"
-                )
-            referenced = {
-                c for e in snap.files(md.EQ_DELETE) for c in e.equality_ids
-            }
-            if old in referenced:
-                raise ValueError(
-                    f"column referenced by live equality-delete files "
-                    f"(compact first): {old}"
-                )
         hist[new] = hist.pop(old, []) + [old]
         new_fields = [
             T.StructField(new, f.dataType, f.nullable, f.metadata)
@@ -886,10 +817,10 @@ class LakeTable:
             else f
             for f in cur.fields
         ]
-        self._evolve_schema(
-            T.StructType(new_fields),
-            dropped=[],
-            extra_props={"column_renames": _json.dumps(hist)},
+        self._evolve(
+            properties={"column_renames": _json.dumps(hist)},
+            unreferenced=(old,),
+            schema=T.StructType(new_fields).jsonValue(),
         )
 
     def set_partition_spec(self, new_spec: list[str]) -> None:
@@ -907,22 +838,7 @@ class LakeTable:
         missing = [c for c in new_spec if c not in live]
         if missing:
             raise ValueError(f"partition columns not in schema: {missing}")
-        base = self.meta
-        meta = md.TableMetadata(
-            table_root=base.table_root,
-            schema=base.schema,
-            schema_id=base.schema_id + 1,
-            partition_spec=list(new_spec),
-            properties=dict(base.properties),
-            refs=dict(base.refs),
-            current_snapshot_id=base.current_snapshot_id,
-            last_sequence_number=base.last_sequence_number,
-            last_snapshot_id=base.last_snapshot_id,
-            version=base.version + 1,
-            snapshots=list(base.snapshots),
-        )
-        md.write_version(meta)
-        self.meta = meta
+        self._evolve(partition_spec=list(new_spec))
 
     def drop_columns(self, names: list[str]) -> None:
         """Remove columns from the schema. Data files are untouched —
@@ -940,33 +856,16 @@ class LakeTable:
         in_part = [n for n in names if n in self.meta.partition_spec]
         if in_part:
             raise ValueError(f"cannot drop partition columns: {in_part}")
-        snap = self.meta.current_snapshot()
-        if snap is not None:
-            # After partition evolution, old files may still virtualize a
-            # column the current spec no longer lists — their scan group
-            # needs it in the schema to recover values.
-            virtual = {
-                c for e in snap.files(md.DATA) for c in e.partition.keys()
-            }
-            still_virtual = [n for n in names if n in virtual]
-            if still_virtual:
-                raise ValueError(
-                    f"columns virtualized in live data files (compact to the "
-                    f"current spec first): {still_virtual}"
-                )
-        if snap is not None:
-            referenced = {
-                c for e in snap.files(md.EQ_DELETE) for c in e.equality_ids
-            }
-            blocked = [n for n in names if n in referenced]
-            if blocked:
-                raise ValueError(
-                    f"columns referenced by live equality-delete files: {blocked}"
-                )
         remaining = [f for f in cur.fields if f.name not in set(names)]
         if not remaining:
             raise ValueError("cannot drop every column")
-        self._evolve_schema(T.StructType(remaining), dropped=list(names))
+        prev = self.meta.properties.get("dropped_columns", "").split(",")
+        dropped = [c for c in prev if c] + list(names)
+        self._evolve(
+            properties={"dropped_columns": ",".join(dropped)},
+            unreferenced=tuple(names),
+            schema=T.StructType(remaining).jsonValue(),
+        )
 
     # ------------------------------------------------------------------
     # row-level operations (MoR DML; the reference's EqualityDeltaWriter
@@ -1005,7 +904,7 @@ class LakeTable:
                 if os.path.exists(e.file_path):
                     os.unlink(e.file_path)
             return None
-        return self._commit_with_retry("delete", entries)
+        return self._commit_files("delete", entries)
 
     def delete_where_as_vectors(self, predicate) -> md.Snapshot | None:
         """Row-level DELETE committed as DELETION VECTORS (r14): the
@@ -1033,7 +932,7 @@ class LakeTable:
         )
         if not entries:
             return None  # nothing matched: nothing written
-        return self._commit_with_retry("delete", entries)
+        return self._commit_files("delete", entries)
 
     def delete_matching(
         self, keys: DataFrame, on: list[str], as_vectors: bool = False
@@ -1066,7 +965,7 @@ class LakeTable:
             )
             if not entries:
                 return None
-            return self._commit_with_retry("delete", entries)
+            return self._commit_files("delete", entries)
         entries = wr.write_position_delete_files(
             matches, self.meta.table_root,
             self.meta.last_sequence_number + 1,
@@ -1076,7 +975,7 @@ class LakeTable:
                 if os.path.exists(e.file_path):
                     os.unlink(e.file_path)
             return None
-        return self._commit_with_retry("delete", entries)
+        return self._commit_files("delete", entries)
 
     def overwrite_partitions(
         self, df: DataFrame, target_file_size: int = 128 * 1024 * 1024
@@ -1100,11 +999,6 @@ class LakeTable:
         at removed data files dangle harmlessly until
         ``rewrite_position_deletes`` drops them.
         """
-        from bergloom_spark.lake.commit import (
-            RetryConfig,
-            RewriteFilesCommitManager,
-        )
-
         add_entries = wr.write_data_files(
             df,
             self.meta.table_root,
@@ -1127,7 +1021,7 @@ class LakeTable:
             starting_sequence_number=self.meta.last_sequence_number + 1,
             # replacement rows must outrank every existing delete
             use_starting_sequence_number=False,
-            retry=RetryConfig(),
+            retry=COMMIT_RETRY,
         )
         self.meta = manager.rewrite_files(
             add_entries,
@@ -1255,7 +1149,7 @@ class LakeTable:
                 bloom_cols=self.bloom_cols(),
             )
         )
-        return self._commit_with_retry("merge", entries)
+        return self._commit_files("merge", entries)
 
     def apply_changes(
         self,
@@ -1329,23 +1223,18 @@ class LakeTable:
         )
         # properties merged atomically with the CDC commit (same CAS)
         # — the streaming sink's exactly-once batch-id guard.
-        return self._commit_with_retry("merge", entries, properties_update)
+        return self._commit_files("merge", entries, properties_update)
 
     def bloom_cols(
-        self,
-        meta: md.TableMetadata | None = None,
-        pending: dict[str, str] | None = None,
+        self, pending: dict[str, str] | None = None
     ) -> list[str] | None:
         """Columns that get per-file equality Bloom filters at write
-        time (the ``write.bloom-filter-columns`` table property). Write
-        paths pass their IN-FLIGHT metadata — or, with the retrying
-        commit (which merges properties only inside the CAS loop, after
-        files are written), the not-yet-committed ``properties_update``
-        as ``pending`` — so a property set in the same commit applies
-        to that commit's own files."""
-        props = dict((meta or self.meta).properties)
-        if pending:
-            props.update(pending)
+        time (the ``write.bloom-filter-columns`` table property). The
+        retrying commit merges properties only after files are written,
+        so write paths pass the not-yet-committed ``properties_update``
+        as ``pending`` — a property set in the same commit applies to
+        that commit's own files."""
+        props = {**self.meta.properties, **(pending or {})}
         prop = props.get(BLOOM_COLS_PROP, "").strip()
         if not prop:
             return None

@@ -960,7 +960,7 @@ class _LakeChangelogReader(_LakeStreamReader):
             # The parent's live view: from the parent snapshot when it
             # is still retained; otherwise RECONSTRUCTED from this
             # snapshot's own carried-forward entries (everything with
-            # seq < s.seq IS the parent's live set — _carry_forward
+            # seq < s.seq IS the parent's live set — commit.with_snapshot
             # copies it verbatim). The reconstruction means a fully
             # caught-up consumer whose last-consumed snapshot was just
             # expired still streams (review r4: requiring the parent

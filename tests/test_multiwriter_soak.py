@@ -2,8 +2,8 @@
 
 N threads hammer one table with appends, CDC merges, and compactions.
 Commits use the optimistic version CAS (metadata.write_version) with
-the new rebuild-and-retry path (LakeTable._commit_with_retry, the
-reference's compaction retry semantics generalized to DML —
+the one rebuild-and-retry path (lake/commit.commit, the reference's
+compaction retry semantics generalized to every commit —
 core/src/compaction/mod.rs:595-611). Invariants: no lost updates, a
 contiguous snapshot-id chain, strictly monotonic sequence numbers, and
 per-key last-writer-wins state after the dust settles.
@@ -36,7 +36,7 @@ def _schema():
 
 
 def _retrying(fn, attempts=20):
-    """Outer re-run for the bounded-retry escape: _commit_with_retry
+    """Outer re-run for the bounded-retry escape: commit.commit
     gives up after max_retries CAS losses; a real writer re-runs the
     operation, which is what this does."""
     for _ in range(attempts):

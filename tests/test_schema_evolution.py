@@ -97,6 +97,38 @@ def test_inflight_compaction_aborts_on_evolution(spark, tmp_path):
     assert sorted(r.id for r in t.read().collect()) == [1, 2]
 
 
+def test_concurrent_evolutions_never_drop_a_change(spark, tmp_path):
+    """Two handles evolve the same schema version: the second commit
+    must refuse (schema-id guard) rather than rebase its stale schema
+    over the first one's change."""
+    from bergloom_spark.lake import metadata as md
+
+    t = _table(spark, tmp_path)
+    root = t.meta.table_root
+
+    def add(name):
+        return lambda h: h.add_columns([T.StructField(name, T.LongType(), True)])
+
+    cases = [
+        (add("x1"), add("x2")),
+        (lambda h: h.rename_column("v", "v2"), add("x3")),
+        (lambda h: h.set_partition_spec(["id"]), add("x4")),
+        (add("x5"), lambda h: h.rename_column("v2", "v3")),
+        (add("x6"), lambda h: h.set_partition_spec(["x1"])),
+    ]
+    for first, second in cases:
+        a, b = LakeTable.load(spark, root), LakeTable.load(spark, root)
+        first(a)
+        won = md.read_current(root)
+        with pytest.raises(CommitFailed, match="schema changed"):
+            second(b)
+        assert md.read_current(root) == won  # the first change survives
+    final = md.read_current(root)
+    names = [f["name"] for f in final.schema["fields"]]
+    assert names == ["id", "v2", "x1", "x5", "x6"]
+    assert final.partition_spec == ["id"]
+
+
 def test_evolution_then_delete_where(spark, tmp_path):
     t = _table(spark, tmp_path)
     t.add_columns([T.StructField("flag", T.BooleanType(), True)])

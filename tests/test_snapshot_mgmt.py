@@ -108,6 +108,75 @@ def test_expire_preserves_current_after_rollback(spark, tmp_path):
     assert sorted(r.id for r in t.read().collect()) == [1]
 
 
+def test_stale_handle_commits_converge(spark, tmp_path):
+    """A handle whose cached metadata fell behind another writer's
+    commit must rebase each metadata-only commit onto the fresh base
+    (or refuse with CommitFailed) — never raise a raw CommitConflict,
+    which it would repeat forever on its stale cache."""
+    from bergloom_spark.lake import metadata as md
+    from bergloom_spark.lake.commit import CommitFailed
+    from bergloom_spark.lake.compaction import expire_snapshots
+    from bergloom_spark.lake.statistics import compute_table_statistics
+
+    t = _table(spark, tmp_path)
+    root = t.meta.table_root
+    first = t.meta.snapshots[0].snapshot_id
+    t.create_branch("dev")
+    t.create_tag("old")
+
+    def other_writer_commits(rid):
+        LakeTable.load(spark, root).append(
+            spark.createDataFrame([(rid, "b")], SCHEMA)
+        )
+
+    staged = {}
+    ops = [
+        ("create_tag", lambda a: a.create_tag("rel")),
+        ("set_branch", lambda a: a.set_branch("dev", first)),
+        ("drop_ref", lambda a: a.drop_ref("old")),
+        ("stage_append", lambda a: staged.update(
+            snap=a.stage_append(spark.createDataFrame([(50, "s")], SCHEMA))
+        )),
+        ("expire_snapshots", lambda a: expire_snapshots(a, keep_last=2)),
+        ("compute_table_statistics",
+         lambda a: compute_table_statistics(a, columns=["id"])),
+        ("rollback_to", lambda a: a.rollback_to(first)),
+        ("set_partition_spec", lambda a: a.set_partition_spec(["v"])),
+        ("add_columns", lambda a: a.add_columns(
+            [T.StructField("extra", T.StringType(), True)]
+        )),
+    ]
+    for i, (name, op) in enumerate(ops):
+        a = LakeTable.load(spark, root)
+        other_writer_commits(100 + i)
+        op(a)  # a raw CommitConflict here fails the test
+        assert a.meta == md.read_current(root), name  # adopted the commit
+        if name == "rollback_to":
+            assert a.meta.current_snapshot_id == first
+        if name == "stage_append":
+            # the stage rebased onto the other writer's commit ...
+            assert (
+                staged["snap"].parent_snapshot_id
+                == a.meta.current_snapshot_id
+            )
+            # ... and publishing it after the table moved again refuses
+            other_writer_commits(200)
+            with pytest.raises(CommitFailed, match="re-stage"):
+                a.publish(staged["snap"].snapshot_id)
+
+    final = md.read_current(root)
+    assert set(final.refs) == {"dev", "rel"}
+    assert final.refs["dev"]["snapshot_id"] == first
+    assert final.partition_spec == ["v"]
+    assert [f["name"] for f in final.schema["fields"]] == ["id", "v", "extra"]
+    assert final.properties["statistics_file"]
+    # the rollback dropped everything after the first append; only the
+    # other writer's two later appends landed on top of it
+    assert sorted(
+        r.id for r in LakeTable.load(spark, root).read().collect()
+    ) == [1, 107, 108]
+
+
 # ---------------------------------------------------------------------------
 # partitions metadata table + manifest-answered count (round 2)
 # ---------------------------------------------------------------------------
