@@ -94,13 +94,15 @@ def with_snapshot(
     entry_sequence_number: int | None = None,
     properties: dict[str, str] | None = None,
     staged: bool = False,
+    timestamp_ms: int | None = None,
 ) -> md.TableMetadata:
     """``base`` plus one snapshot: the current live files minus
     ``remove``, plus copies of ``entries`` stamped with
     ``entry_sequence_number`` (default: the new snapshot's).
     ``properties`` merge into the table's in the same commit. A
     ``staged`` snapshot (write-audit-publish) is recorded but the
-    table keeps pointing at its parent."""
+    table keeps pointing at its parent. ``timestamp_ms`` defaults to
+    now; snapshots built in one commit pass a shared one."""
     seq = base.last_sequence_number + 1
     snapshot_id = base.last_snapshot_id + 1
     stamp = seq if entry_sequence_number is None else entry_sequence_number
@@ -108,7 +110,9 @@ def with_snapshot(
     snap = md.Snapshot(
         snapshot_id=snapshot_id,
         sequence_number=seq,
-        timestamp_ms=int(time.time() * 1000),
+        timestamp_ms=(
+            int(time.time() * 1000) if timestamp_ms is None else timestamp_ms
+        ),
         operation=operation,
         entries=[
             e for e in (current.entries if current else [])

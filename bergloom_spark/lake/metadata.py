@@ -17,7 +17,7 @@ from __future__ import annotations
 
 import json
 import os
-from dataclasses import asdict, dataclass, field
+from dataclasses import dataclass, field
 
 DATA = "data"
 POS_DELETE = "pos_delete"
@@ -115,7 +115,14 @@ class TableMetadata:
         raise KeyError(f"snapshot {snapshot_id} not found")
 
     def to_json(self) -> str:
-        return json.dumps(asdict(self), indent=1)
+        # Shallow vars() views instead of asdict()'s deep copy, and no
+        # indent: json.dumps uses its C encoder only when indent is None.
+        raw = dict(vars(self))
+        raw["snapshots"] = [
+            {**vars(s), "entries": [vars(e) for e in s.entries]}
+            for s in self.snapshots
+        ]
+        return json.dumps(raw)
 
     @staticmethod
     def from_json(text: str) -> "TableMetadata":

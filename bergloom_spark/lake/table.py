@@ -14,7 +14,9 @@ from __future__ import annotations
 import dataclasses
 import re
 import time
+from concurrent.futures import ThreadPoolExecutor
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -266,6 +268,25 @@ class LakeTable:
 
         return self._commit(update).snapshots[-1]
 
+    def _write_data(
+        self,
+        df: DataFrame,
+        sequence_number: int,
+        target_file_size: int = 128 * 1024 * 1024,
+        pending: dict[str, str] | None = None,
+    ) -> list[md.ManifestEntry]:
+        """Write ``df`` as data files laid out by the table's partition
+        spec, with Bloom filters per :meth:`bloom_cols` (``pending``:
+        properties committed alongside these files)."""
+        return wr.write_data_files(
+            df,
+            self.meta.table_root,
+            sequence_number,
+            target_file_size,
+            partition_spec=self.meta.partition_spec or None,
+            bloom_cols=self.bloom_cols(pending=pending),
+        )
+
     def append(
         self,
         df: DataFrame,
@@ -276,13 +297,9 @@ class LakeTable:
         into table properties ATOMICALLY with the data commit (same
         metadata-version CAS) — what a streaming sink needs to record
         its batch id exactly-once alongside the rows it wrote."""
-        entries = wr.write_data_files(
-            df,
-            self.meta.table_root,
-            self.meta.last_sequence_number + 1,
-            target_file_size,
-            partition_spec=self.meta.partition_spec or None,
-            bloom_cols=self.bloom_cols(pending=properties_update),
+        entries = self._write_data(
+            df, self.meta.last_sequence_number + 1, target_file_size,
+            pending=properties_update,
         )
         return self._commit_files("append", entries, properties_update)
 
@@ -294,13 +311,8 @@ class LakeTable:
         ``read(snapshot_id=...)``, then :meth:`publish` it (or leave it
         for ``expire_snapshots`` to reap). Files are fully written and
         durable — publish is a metadata flip."""
-        entries = wr.write_data_files(
-            df,
-            self.meta.table_root,
-            self.meta.last_sequence_number + 1,
-            target_file_size,
-            partition_spec=self.meta.partition_spec or None,
-            bloom_cols=self.bloom_cols(),
+        entries = self._write_data(
+            df, self.meta.last_sequence_number + 1, target_file_size
         )
         return self._commit_files("stage-append", entries, staged=True)
 
@@ -999,13 +1011,8 @@ class LakeTable:
         at removed data files dangle harmlessly until
         ``rewrite_position_deletes`` drops them.
         """
-        add_entries = wr.write_data_files(
-            df,
-            self.meta.table_root,
-            self.meta.last_sequence_number + 1,
-            target_file_size,
-            partition_spec=self.meta.partition_spec or None,
-            bloom_cols=self.bloom_cols(),
+        add_entries = self._write_data(
+            df, self.meta.last_sequence_number + 1, target_file_size
         )
         touched = {tuple(sorted(e.partition.items())) for e in add_entries}
         cur = self.meta.current_snapshot()
@@ -1034,13 +1041,42 @@ class LakeTable:
     def upsert(self, df: DataFrame, key_cols: list[str]) -> md.Snapshot:
         """MERGE-style upsert: equality-delete on the keys, then append.
 
-        Two commits mirroring the reference's equality-delta write path
-        (delete file with ``equality_ids`` = keys at seq N, data at
-        seq N+1): old rows with matching keys become invisible, new
-        rows land after the delete so the seq gate keeps them.
+        Two snapshots in one commit, the reference's equality-delta
+        write path: a ``delete`` snapshot (equality-delete file with
+        ``equality_ids`` = keys, seq N) and an ``append`` snapshot
+        (the rows, seq N+1), so old rows with matching keys become
+        invisible while the seq gate keeps the new ones. Both land in
+        one metadata version through one CAS: no reader ever sees the
+        keys deleted but not yet re-inserted, and a failed write
+        commits nothing (its files are orphans). The snapshots share
+        one timestamp, so time travel never resolves to the delete
+        alone; append-only readers still see an append.
+
+        The two Spark writes are independent, so the delete file is
+        written on a worker thread (carrying this thread's job group
+        and local properties) while the data file is written here.
+        Returns the append snapshot.
         """
-        self.append_equality_deletes(df.select(*key_cols), key_cols)
-        return self.append(df)
+        seq = self.meta.last_sequence_number + 1
+        write_deletes = inheritable_thread_target(self.spark)(
+            wr.write_equality_delete_files
+        )
+        with ThreadPoolExecutor(max_workers=1) as pool:
+            deleting = pool.submit(
+                write_deletes,
+                df.select(*key_cols), self.meta.table_root, seq, key_cols,
+            )
+            try:
+                data = self._write_data(df, seq + 1)
+            finally:
+                deletes = deleting.result()
+
+        def update(base: md.TableMetadata) -> md.TableMetadata:
+            now = int(time.time() * 1000)
+            deleted = with_snapshot(base, "delete", deletes, timestamp_ms=now)
+            return with_snapshot(deleted, "append", data, timestamp_ms=now)
+
+        return self._commit(update).snapshots[-1]
 
     def merge_into(
         self,
@@ -1139,16 +1175,7 @@ class LakeTable:
         entries = wr.write_equality_delete_files(
             matched_keys, self.meta.table_root, seq, key_cols
         )
-        entries.extend(
-            wr.write_data_files(
-                new_rows,
-                self.meta.table_root,
-                seq,
-                target_file_size,
-                partition_spec=self.meta.partition_spec or None,
-                bloom_cols=self.bloom_cols(),
-            )
-        )
+        entries.extend(self._write_data(new_rows, seq, target_file_size))
         return self._commit_files("merge", entries)
 
     def apply_changes(
@@ -1174,8 +1201,8 @@ class LakeTable:
         files for surviving rows land in the SAME snapshot at the same
         sequence number — the delete shadows only strictly-older data
         (seq gate), so the new rows survive their own commit, and a
-        reader never observes the deleted-but-not-yet-reinserted
-        intermediate state that two-commit upsert exposes.
+        reader never observes a deleted-but-not-yet-reinserted
+        intermediate state.
 
         Determinism: ties (same key, same order) break by op then a
         hash of the value columns, so retried tasks pick the same
@@ -1212,13 +1239,11 @@ class LakeTable:
             winners.select(*key_cols), self.meta.table_root, seq, key_cols
         )
         entries.extend(
-            wr.write_data_files(
+            self._write_data(
                 winners.filter(F.col(op_col) != F.lit("D")).select(*user_cols),
-                self.meta.table_root,
                 seq,
                 target_file_size,
-                partition_spec=self.meta.partition_spec or None,
-                bloom_cols=self.bloom_cols(pending=properties_update),
+                pending=properties_update,
             )
         )
         # properties merged atomically with the CDC commit (same CAS)
