@@ -7,13 +7,11 @@ Spark-specific knobs the reference delegates to DataFusion.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 # Reference defaults (core/src/config/mod.rs:22-49).
 DEFAULT_BATCH_PARALLELISM = 4
-DEFAULT_TARGET_PARTITIONS = 4
 DEFAULT_TARGET_FILE_SIZE = 1024 * 1024 * 1024  # 1 GiB
-DEFAULT_MAX_RECORD_BATCH_ROWS = 1024
 
 # Rolling-writer thresholds (rolling_iceberg_writer.rs:75-95).
 ROLL_MIN_FRACTION = 0.10   # don't roll before 10% of target written
@@ -31,9 +29,7 @@ class CompactionConfig:
     """Knobs for a compaction run (reference ``config/mod.rs:36-55``)."""
 
     batch_parallelism: int = DEFAULT_BATCH_PARALLELISM
-    target_partitions: int = DEFAULT_TARGET_PARTITIONS
     target_file_size: int = DEFAULT_TARGET_FILE_SIZE
-    max_record_batch_rows: int = DEFAULT_MAX_RECORD_BATCH_ROWS
     enable_validate_compaction: bool = False
     # Parquet codec: reference defaults to Snappy (config/mod.rs:29-34).
     write_compression: str = "snappy"
@@ -43,4 +39,3 @@ class CompactionConfig:
     commit_retries: int = DEFAULT_COMMIT_RETRIES
     retry_initial_delay_s: float = DEFAULT_RETRY_INITIAL_DELAY_S
     retry_max_delay_s: float = DEFAULT_RETRY_MAX_DELAY_S
-    extra_write_properties: dict[str, str] = field(default_factory=dict)

@@ -894,29 +894,7 @@ class LakeTable:
         footer (driver-side) instead of a separate ``isEmpty()`` job,
         and an all-empty write is rolled back without committing.
         """
-        import os
-
-        from pyspark.sql import functions as F
-
-        hidden = self.scan_data(with_hidden=True)
-        matches = hidden.filter(predicate).select(
-            F.col(mor.SYS_HIDDEN_FILE_PATH).alias("file_path"),
-            F.col(mor.SYS_HIDDEN_POS).alias("pos"),
-        )
-        # MoR semantics: a pos-delete only applies to rows already
-        # shadowed by it; rows already removed by live deletes must not
-        # be re-listed, which scan_data avoids by construction (it scans
-        # raw data files — re-deleting an already-deleted (file,pos) is
-        # harmless and idempotent).
-        entries = wr.write_position_delete_files(
-            matches, self.meta.table_root, self.meta.last_sequence_number + 1
-        )
-        if sum(e.record_count for e in entries) == 0:
-            for e in entries:  # nothing matched: discard, don't commit
-                if os.path.exists(e.file_path):
-                    os.unlink(e.file_path)
-            return None
-        return self._commit_files("delete", entries)
+        return self._delete_rows(lambda hidden: hidden.filter(predicate))
 
     def delete_where_as_vectors(self, predicate) -> md.Snapshot | None:
         """Row-level DELETE committed as DELETION VECTORS (r14): the
@@ -931,20 +909,9 @@ class LakeTable:
         additive delete semantics); ``rewrite_deletes_to_vectors``
         folds the stack to one DV per file. Returns the new
         snapshot, or None when nothing matched."""
-        from pyspark.sql import functions as F
-
-        hidden = self.scan_data(with_hidden=True)
-        matches = hidden.filter(predicate).select(
-            F.col(mor.SYS_HIDDEN_FILE_PATH).alias("file_path"),
-            F.col(mor.SYS_HIDDEN_POS).alias("pos"),
+        return self._delete_rows(
+            lambda hidden: hidden.filter(predicate), as_vectors=True
         )
-        entries = wr.write_deletion_vector_files(
-            matches, self.meta.table_root,
-            self.meta.last_sequence_number + 1,
-        )
-        if not entries:
-            return None  # nothing matched: nothing written
-        return self._commit_files("delete", entries)
 
     def delete_matching(
         self, keys: DataFrame, on: list[str], as_vectors: bool = False
@@ -961,29 +928,38 @@ class LakeTable:
         v3-style deletion vectors instead of a parquet pos-delete
         file. Returns the new snapshot, or None if nothing
         matched."""
-        hidden = self.scan_data(with_hidden=True)
+        return self._delete_rows(
+            lambda hidden: hidden.join(
+                keys.select(*on).dropDuplicates(), on, "left_semi"
+            ),
+            as_vectors=as_vectors,
+        )
+
+    def _delete_rows(self, match, as_vectors: bool = False) -> md.Snapshot | None:
+        """Commit the rows ``match(hidden scan)`` keeps as one delete
+        snapshot of their ``(file_path, pos)``: positional-delete
+        files, or deletion vectors with ``as_vectors``. Returns None,
+        committing nothing, when no row matched.
+
+        The hidden scan reads raw data files, so rows already removed
+        by live deletes may be re-listed — harmless: re-deleting an
+        already-deleted (file, pos) is idempotent."""
         import os
 
-        matches = hidden.join(
-            keys.select(*on).dropDuplicates(), on, "left_semi"
-        ).select(
+        matches = match(self.scan_data(with_hidden=True)).select(
             F.col(mor.SYS_HIDDEN_FILE_PATH).alias("file_path"),
             F.col(mor.SYS_HIDDEN_POS).alias("pos"),
         )
-        if as_vectors:
-            entries = wr.write_deletion_vector_files(
-                matches, self.meta.table_root,
-                self.meta.last_sequence_number + 1,
-            )
-            if not entries:
-                return None
-            return self._commit_files("delete", entries)
-        entries = wr.write_position_delete_files(
-            matches, self.meta.table_root,
-            self.meta.last_sequence_number + 1,
+        write = (
+            wr.write_deletion_vector_files
+            if as_vectors
+            else wr.write_position_delete_files
+        )
+        entries = write(
+            matches, self.meta.table_root, self.meta.last_sequence_number + 1
         )
         if sum(e.record_count for e in entries) == 0:
-            for e in entries:
+            for e in entries:  # nothing matched: discard, don't commit
                 if os.path.exists(e.file_path):
                     os.unlink(e.file_path)
             return None

@@ -1,6 +1,7 @@
 """The one commit primitive (lake/commit.commit): retry on a reloaded
 base, the shared backoff budget, entry copies that keep every field,
-and a structural guard that keeps every other module off the raw CAS."""
+and structural guards: every other module stays off the raw CAS, and
+RewriteFiles commits are built in only two places."""
 
 from __future__ import annotations
 
@@ -170,35 +171,48 @@ def _name(node) -> str:
     return node.id if isinstance(node, ast.Name) else ""
 
 
-def _scan(rel: str, source: str) -> tuple[set[str], set[str]]:
-    """(write_version call sites as "file:qualname", files holding an
-    ``except ... CommitConflict``) of one module."""
-    calls, handlers = set(), set()
+def _walk(source: str):
+    """(enclosing qualname parts, node) for every node of a module."""
 
     def visit(node, scope):
         for child in ast.iter_child_nodes(node):
-            inner = scope
+            yield scope, child
             if isinstance(
                 child, (ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef)
             ):
-                inner = scope + [child.name]
-            if isinstance(child, ast.Call) and _name(child.func) == "write_version":
-                calls.add(f"{rel}:{'.'.join(scope)}")
-            if isinstance(child, ast.ImportFrom) and any(
-                a.name == "write_version" for a in child.names
-            ):
-                calls.add(f"{rel}:import")
-            if isinstance(child, ast.ExceptHandler) and child.type is not None:
-                types = (
-                    child.type.elts
-                    if isinstance(child.type, ast.Tuple)
-                    else [child.type]
-                )
-                if any(_name(t) == "CommitConflict" for t in types):
-                    handlers.add(rel)
-            visit(child, inner)
+                yield from visit(child, scope + [child.name])
+            else:
+                yield from visit(child, scope)
 
-    visit(ast.parse(source), [])
+    return visit(ast.parse(source), [])
+
+
+def _call_sites(rel: str, source: str, callee: str) -> set[str]:
+    """Calls of ``callee`` in one module, as "file:qualname"."""
+    return {
+        f"{rel}:{'.'.join(scope)}"
+        for scope, node in _walk(source)
+        if isinstance(node, ast.Call) and _name(node.func) == callee
+    }
+
+
+def _scan(rel: str, source: str) -> tuple[set[str], set[str]]:
+    """(write_version call sites as "file:qualname", files holding an
+    ``except ... CommitConflict``) of one module."""
+    calls, handlers = _call_sites(rel, source, "write_version"), set()
+    for _, node in _walk(source):
+        if isinstance(node, ast.ImportFrom) and any(
+            a.name == "write_version" for a in node.names
+        ):
+            calls.add(f"{rel}:import")
+        if isinstance(node, ast.ExceptHandler) and node.type is not None:
+            types = (
+                node.type.elts
+                if isinstance(node.type, ast.Tuple)
+                else [node.type]
+            )
+            if any(_name(t) == "CommitConflict" for t in types):
+                handlers.add(rel)
     return calls, handlers
 
 
@@ -226,3 +240,32 @@ def test_every_commit_goes_through_commit_primitive():
         handlers |= h
     assert calls == WRITE_VERSION_CALLERS
     assert handlers <= CONFLICT_HANDLERS
+
+
+# ---------------------------------------------------------------------------
+# structural guard: one RewriteFiles commit site per caller kind
+# ---------------------------------------------------------------------------
+REWRITE_MANAGER_SITES = {
+    "lake/compaction.py:_commit_rewrite",
+    "lake/table.py:LakeTable.overwrite_partitions",
+}
+
+
+def test_rewrite_guard_finds_constructions_in_any_scope():
+    sites = _call_sites("lake/x.py", (
+        "m = RewriteFilesCommitManager(root)\n"
+        "class T:\n"
+        "    def fold(self):\n"
+        "        def inner():\n"
+        "            return commit.RewriteFilesCommitManager(root)\n"
+        "        return RewriteFilesCommitManager\n"
+    ), "RewriteFilesCommitManager")
+    assert sites == {"lake/x.py:", "lake/x.py:T.fold.inner"}
+
+
+def test_rewrite_files_managers_built_only_by_the_two_rewrite_paths():
+    sites = set()
+    for path in sorted(PKG.rglob("*.py")):
+        rel = path.relative_to(PKG).as_posix()
+        sites |= _call_sites(rel, path.read_text(), "RewriteFilesCommitManager")
+    assert sites == REWRITE_MANAGER_SITES

@@ -9,7 +9,7 @@ from pyspark.sql import types as T
 from bergloom_spark.config import CompactionConfig
 from bergloom_spark.lake import Compaction, LakeTable
 from bergloom_spark.lake import metadata as md
-from bergloom_spark.lake.compaction import BinpackCompaction
+from bergloom_spark.lake.compaction import BinpackCompaction, SortCompaction
 
 SCHEMA = T.StructType(
     [
@@ -154,13 +154,14 @@ def test_sort_compaction_clusters_output(spark, tmp_path):
         assert hi1 <= lo2, ranges
 
 
-def test_zorder_compaction_clusters_both_dims(spark, tmp_path):
+def _assert_zorder_clusters_both_dims(spark, tmp_path, make_compaction):
     """Z-order rewrite: rows preserved; EACH interleaved column's
     per-file min/max extent is a fraction of its global range (the
-    multi-dimensional pruning property single-column sort lacks)."""
+    multi-dimensional pruning property single-column sort lacks).
+    ``y`` spans a domain 100,000x wider than ``x``: interleaving raw
+    masked bits would give neither column locality, so this also pins
+    the manifest-stat range normalization."""
     import pyarrow.parquet as pq
-
-    from bergloom_spark.lake.compaction import SortCompaction
 
     schema = T.StructType(
         [
@@ -170,24 +171,22 @@ def test_zorder_compaction_clusters_both_dims(spark, tmp_path):
     )
     t = LakeTable.create(spark, str(tmp_path / "z"), schema)
     grid = spark.range(64 * 64).select(
-        (F.col("id") % 64).alias("x"), (F.col("id") / 64).cast("long").alias("y")
+        (F.col("id") % 64).alias("x"),
+        ((F.col("id") / 64).cast("long") * 100_000).alias("y"),
     )
-    t.append(grid.orderBy(F.rand(seed=7)))  # scrambled layout
+    scrambled = grid.orderBy(F.rand(seed=7))
+    for k in range(4):  # four small files, each with a scrambled layout
+        t.append(scrambled.filter(F.col("x") % 4 == k))
     before = sorted((r.x, r.y) for r in t.read().collect())
 
-    result = SortCompaction(
-        t,
-        CompactionConfig(target_file_size=256),
-        sort_cols=["x", "y"],
-        zorder=True,
-        n_output_files=4,
-    ).compact()
+    result = make_compaction(t).compact()
     assert result.stat.added_files_count >= 4
 
     after = sorted((r.x, r.y) for r in t.read().collect())
     assert after == before
 
     snap = t.meta.current_snapshot()
+    spans = {"x": 63, "y": 63 * 100_000}
     extents = {"x": [], "y": []}
     for e in snap.files(md.DATA):
         meta = pq.read_metadata(e.file_path)
@@ -200,7 +199,90 @@ def test_zorder_compaction_clusters_both_dims(spark, tmp_path):
             extents[name].append(max(maxs) - min(mins))
     for name in ("x", "y"):
         avg_extent = sum(extents[name]) / len(extents[name])
-        assert avg_extent < 0.75 * 63, (name, extents[name])
+        assert avg_extent < 0.75 * spans[name], (name, extents[name])
+
+
+def test_zorder_compaction_clusters_both_dims(spark, tmp_path):
+    _assert_zorder_clusters_both_dims(
+        spark,
+        tmp_path,
+        lambda t: SortCompaction(
+            t,
+            CompactionConfig(target_file_size=256),
+            sort_cols=["x", "y"],
+            zorder=True,
+            n_output_files=4,
+        ),
+    )
+
+
+def test_binpack_zorder_clusters_both_dims(spark, tmp_path):
+    def binpack(t):
+        in_bytes = sum(
+            e.file_size_bytes for e in t.meta.current_snapshot().files(md.DATA)
+        )
+        return BinpackCompaction(
+            t,
+            CompactionConfig(target_file_size=-(-in_bytes // 4)),
+            small_file_threshold=1 << 40,
+            sort_cols=["x", "y"],
+            zorder=True,
+        )
+
+    _assert_zorder_clusters_both_dims(spark, tmp_path, binpack)
+
+
+STRATEGIES = {
+    "full": Compaction,
+    "binpack": BinpackCompaction,
+    "sort": lambda t, *a, **kw: SortCompaction(t, *a, sort_cols=["id"], **kw),
+}
+
+
+@pytest.mark.parametrize("strategy", sorted(STRATEGIES))
+def test_every_strategy_honors_validate_mock_and_commit_metrics(
+    spark, tmp_path, strategy
+):
+    """All strategies run one pipeline: a mock run commits nothing,
+    ``enable_validate_compaction`` validates, and the commit is counted
+    in the registry. Binpack leaves a large file and the delete file
+    live, so its validation must compare only the files it rewrote."""
+    from bergloom_spark.lake.compaction import RewriteFilesStat
+    from bergloom_spark.lake.metrics import MetricsRegistry
+
+    t = _table(spark, tmp_path)
+    for k in range(3):
+        t.append(_df(spark, 100, f"s{k}"))
+    t.append(_df(spark, 3000, "big"))
+    t.delete_where(F.col("id") % 10 == 0)
+    big = max(
+        t.meta.current_snapshot().files(md.DATA),
+        key=lambda e: e.file_size_bytes,
+    )
+    make = STRATEGIES[strategy]
+    config = CompactionConfig(
+        enable_validate_compaction=True,
+        target_file_size=2 * big.file_size_bytes,  # binpack: big is not small
+    )
+    rows = sorted(map(tuple, t.read().collect()))
+    version = t.meta.version
+    registry = MetricsRegistry()
+
+    dry = make(t, config, registry=registry, executor="mock").compact()
+    assert dry.stat == RewriteFilesStat()
+    assert t.refresh().meta.version == version
+    assert sorted(map(tuple, t.read().collect())) == rows
+
+    result = make(t, config, registry=registry).compact()
+    assert result.validated
+    assert result.stat.rewritten_files_count >= 3
+    assert t.meta.version == version + 1
+    assert sorted(map(tuple, t.read().collect())) == rows
+    live = {e.file_path for e in t.meta.current_snapshot().entries}
+    assert (big.file_path in live) == (strategy == "binpack")
+    metrics = registry.for_table("lake", t.meta.table_root)
+    assert metrics.compaction_commit_counter == 1
+    assert metrics.compaction_commit_duration.n == 1
 
 
 def test_remove_orphan_files(spark, tmp_path):
@@ -241,7 +323,7 @@ def test_binpack_partition_scoped(spark, tmp_path):
     from bergloom_spark.config import CompactionConfig
     from bergloom_spark.lake import LakeTable
     from bergloom_spark.lake import metadata as md
-    from bergloom_spark.lake.compaction import BinpackCompaction
+    from bergloom_spark.lake.compaction import BinpackCompaction, SortCompaction
 
     base = spark.range(400).select(
         (F.col("id") % 2).alias("p"), F.col("id").alias("k")

@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import urllib.request
 
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -48,7 +49,9 @@ def _compact_once(spark, tmp_path, registry):
 
 
 class TestPrometheusExport:
-    def test_compaction_metrics_render_and_serve(self, spark, tmp_path):
+    def test_compaction_metrics_render_and_serve(
+        self, spark, tmp_path, monkeypatch
+    ):
         registry = MetricsRegistry()
         result = _compact_once(spark, tmp_path, registry)
         assert result.stat.rewritten_files_count >= 2
@@ -83,6 +86,25 @@ class TestPrometheusExport:
             )
         finally:
             server.shutdown()
+        # added bytes = the compacted files' sizes (all live files now)
+        t = LakeTable.load(spark, str(tmp_path / "m"))
+        label = f'catalog_name="lake",table_ident="{t.meta.table_root}"'
+        added = sum(e.file_size_bytes for e in t.meta.current_snapshot().entries)
+        assert f"compaction_added_bytes{{{label}}} {added}" in text
+        # a failure before the commit is an executor error, not a
+        # commit failure
+        from bergloom_spark.lake import writer as wr
+
+        def lost(*a, **k):
+            raise RuntimeError("executor lost")
+
+        monkeypatch.setattr(wr, "write_data_files", lost)
+        with pytest.raises(RuntimeError, match="executor lost"):
+            Compaction(t, registry=registry).compact()
+        text = registry.prometheus_text()
+        assert f"compaction_executor_error_counter{{{label}}} 1" in text
+        assert f"compaction_error_counter{{{label}}} 1" in text
+        assert f"compaction_commit_failed_counter{{{label}}} 0" in text
 
     def test_label_escaping(self):
         registry = MetricsRegistry()
