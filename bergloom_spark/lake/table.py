@@ -1352,28 +1352,7 @@ class LakeTable:
         df = self._apply_filters(df, filters)
         if not with_hidden:
             return df.select(*user_cols)
-        # Per-file sequence numbers from the manifest. Small file
-        # counts: a literal-map probe (one hash per row, zero join
-        # nodes). Large: broadcast join, which keeps the scan's
-        # partitioning (no shuffle) at any file count.
-        if len(data_files) <= _MAP_LITERAL_CAP:
-            smap = F.create_map(
-                *[
-                    F.lit(x)
-                    for e in data_files
-                    for x in (e.file_path, e.sequence_number)
-                ]
-            )
-            df = df.withColumn(
-                mor.SYS_HIDDEN_SEQ_NUM,
-                F.try_element_at(smap, F.col(mor.SYS_HIDDEN_FILE_PATH)).cast("long"),
-            )
-        else:
-            seq_map = self.spark.createDataFrame(
-                [(e.file_path, e.sequence_number) for e in data_files],
-                f"{mor.SYS_HIDDEN_FILE_PATH} string, {mor.SYS_HIDDEN_SEQ_NUM} long",
-            )
-            df = df.join(F.broadcast(seq_map), mor.SYS_HIDDEN_FILE_PATH, "left")
+        df = self._with_seq_nums(df, data_files)
         return df.select(
             *user_cols,
             mor.SYS_HIDDEN_SEQ_NUM,
@@ -1396,12 +1375,47 @@ class LakeTable:
             df = df.filter(self._FILTER_OPS[op](F.col(col), F.lit(value)))
         return df
 
-    def _scan_file_group(
-        self, part_cols: list[str], data_files: list[md.ManifestEntry]
+    def _with_seq_nums(
+        self, df: DataFrame, files: list[md.ManifestEntry]
     ) -> DataFrame:
-        """Scan files sharing one virtualized-column set; returns user
-        columns + hidden file_path/pos."""
+        """Attach ``sys_hidden_seq_num`` to a :meth:`_scan_file_group`
+        frame: each row's file sequence number from the manifest, the
+        reference's per-scan-task tagging
+        (``iceberg_file_task_scan.rs:356-372``), for data and
+        equality-delete files alike. Small file counts: a literal-map
+        probe (one hash per row, zero join nodes). Large: broadcast
+        join, which keeps the scan's partitioning (no shuffle) at any
+        file count."""
+        if len(files) <= _MAP_LITERAL_CAP:
+            smap = F.create_map(
+                *[F.lit(x) for e in files for x in (e.file_path, e.sequence_number)]
+            )
+            return df.withColumn(
+                mor.SYS_HIDDEN_SEQ_NUM,
+                F.try_element_at(smap, F.col(mor.SYS_HIDDEN_FILE_PATH)).cast("long"),
+            )
+        seq_map = self.spark.createDataFrame(
+            [(e.file_path, e.sequence_number) for e in files],
+            f"{mor.SYS_HIDDEN_FILE_PATH} string, {mor.SYS_HIDDEN_SEQ_NUM} long",
+        )
+        return df.join(F.broadcast(seq_map), mor.SYS_HIDDEN_FILE_PATH, "left")
+
+    def _scan_file_group(
+        self,
+        part_cols: list[str],
+        files: list[md.ManifestEntry],
+        columns: list[str] | None = None,
+    ) -> DataFrame:
+        """Scan lake parquet files (data or equality-delete) sharing one
+        virtualized-column set; returns ``columns`` (default: every
+        user column) + hidden file_path/pos. The one place that
+        resolves file columns to the table schema."""
+        fields = [
+            f for f in self.schema.fields if columns is None or f.name in columns
+        ]
+        body = [f for f in fields if f.name not in set(part_cols)]
         field_ids = self._field_id_read_map()
+        renames = {} if field_ids is not None else self._rename_history()
         if field_ids is not None:
             # Pure field-id resolution (imported tables whose rename
             # history is a name SWAP — names are unusable): the read
@@ -1418,19 +1432,12 @@ class LakeTable:
                     f.name, f.dataType, True,
                     {"parquet.field.id": field_ids[f.name]},
                 )
-                for f in self.schema.fields
-                if f.name not in set(part_cols)
-                and f.name in field_ids
+                for f in body
+                if f.name in field_ids
             ]
-            df = self.spark.read.schema(
-                T.StructType(file_fields)
-            ).parquet(*[e.file_path for e in data_files])
         else:
-            renames = self._rename_history()
             file_fields = []
-            for f in self.schema.fields:
-                if f.name in set(part_cols):
-                    continue
+            for f in body:
                 file_fields.append(f)
                 # Files written before a rename store the column
                 # under a historical name; read those too (NULL
@@ -1438,26 +1445,24 @@ class LakeTable:
                 # exactly one of the names.
                 for h in renames.get(f.name, []):
                     file_fields.append(T.StructField(h, f.dataType, True))
-            df = self.spark.read.schema(T.StructType(file_fields)).parquet(
-                *[e.file_path for e in data_files]
-            )
-            for f in self.schema.fields:
-                hs = renames.get(f.name, [])
-                if hs and f.name not in set(part_cols):
-                    df = df.withColumn(
-                        f.name,
-                        F.coalesce(
-                            F.col(f.name), *[F.col(h) for h in reversed(hs)]
-                        ),
-                    )
+        df = self.spark.read.schema(T.StructType(file_fields)).parquet(
+            *[e.file_path for e in files]
+        )
+        for f in body:
+            hs = renames.get(f.name, [])
+            if hs:
+                df = df.withColumn(
+                    f.name,
+                    F.coalesce(F.col(f.name), *[F.col(h) for h in reversed(hs)]),
+                )
         # Per-file dictionary: resolve the URI→path mapping ONCE per
         # file on the driver instead of regex+url-decoding a ~100-byte
         # string per ROW (that decode is ~0.4 s/M rows of pure
         # expression cost, paid on every MoR pass). Verified-exact or
         # ignored — see _uri_path_map.
         uri_map = (
-            _uri_path_map(df, [e.file_path for e in data_files])
-            if len(data_files) <= _MAP_LITERAL_CAP
+            _uri_path_map(df, [e.file_path for e in files])
+            if len(files) <= _MAP_LITERAL_CAP
             else None
         )
         # Capture _metadata immediately — the pseudo-column does not
@@ -1498,7 +1503,7 @@ class LakeTable:
                 for c in part_cols:
                     entries = [
                         (e.file_path, e.partition.get(c))
-                        for e in data_files
+                        for e in files
                         if e.partition.get(c) is not None
                     ]
                     if entries:
@@ -1513,7 +1518,7 @@ class LakeTable:
             else:
                 part_map = self.spark.createDataFrame(
                     [tuple([e.file_path] + [e.partition.get(c) for c in part_cols])
-                     for e in data_files],
+                     for e in files],
                     T.StructType(
                         [T.StructField(mor.SYS_HIDDEN_FILE_PATH, T.StringType())]
                         + [T.StructField(c, T.StringType()) for c in part_cols]
@@ -1526,9 +1531,10 @@ class LakeTable:
                     ],
                 )
                 df = df.join(F.broadcast(part_map), mor.SYS_HIDDEN_FILE_PATH, "left")
-        user_cols = [f.name for f in self.schema.fields]
         return df.select(
-            *user_cols, mor.SYS_HIDDEN_FILE_PATH, mor.SYS_HIDDEN_POS
+            *[f.name for f in fields],
+            mor.SYS_HIDDEN_FILE_PATH,
+            mor.SYS_HIDDEN_POS,
         )
 
     def _pos_delete_frame(self, snap: md.Snapshot) -> DataFrame | None:
@@ -1605,64 +1611,23 @@ class LakeTable:
         return desc.mapInPandas(decode, schema=md.POS_DELETE_SCHEMA)
 
     def _eq_delete_groups(self, snap: md.Snapshot) -> list[mor.EqualityDeleteGroup]:
-        entries = []
-        renames = self._rename_history()
-        field_ids = self._field_id_read_map()
+        """One group per equality-id set (the reference's grouping,
+        ``datafusion_processor.rs:481-504``): all of the set's files in
+        one scan, each row tagged with its file's sequence number."""
+        by_ids: dict[tuple[str, ...], list[md.ManifestEntry]] = {}
         for e in snap.files(md.EQ_DELETE):
-            if field_ids is not None:
-                # field-id table (swap history): eq-delete files
-                # store keys under names of THEIR write epoch; only
-                # id resolution reads them safely (a name read would
-                # see NULL keys and silently delete nothing).
-                self.spark.conf.set(
-                    "spark.sql.parquet.fieldId.read.enabled", "true"
-                )
-                key_fields = [
-                    T.StructField(
-                        f.name, f.dataType, True,
-                        {"parquet.field.id": field_ids[f.name]},
-                    )
-                    for f in self.schema.fields
-                    if f.name in set(e.equality_ids)
-                    and f.name in field_ids
-                ]
-                frame = self.spark.read.schema(
-                    T.StructType(key_fields)
-                ).parquet(e.file_path).select(*e.equality_ids)
-                entries.append((frame, e.equality_ids, e.sequence_number))
-                continue
-            # Eq-delete files contain exactly the equality_ids columns
-            # (writer projects them, writer.py:200); reading with that
-            # schema skips the per-file schema-inference job a bare
-            # spark.read.parquet would launch. Imported files written
-            # BEFORE a column rename carry the historical name — read
-            # those too (NULL where absent) and coalesce, mirroring
-            # _scan_file_group's data-file handling (native tables
-            # never hit this: rename_column refuses with live
-            # eq-deletes on the column).
-            key_set = set(e.equality_ids)
-            file_fields: list[T.StructField] = []
-            for f in self.schema.fields:
-                if f.name not in key_set:
-                    continue
-                file_fields.append(f)
-                for h in renames.get(f.name, []):
-                    file_fields.append(T.StructField(h, f.dataType, True))
-            frame = self.spark.read.schema(T.StructType(file_fields)).parquet(
-                e.file_path
+            by_ids.setdefault(tuple(e.equality_ids), []).append(e)
+        groups = []
+        for ids, files in by_ids.items():
+            frame = self._with_seq_nums(
+                self._scan_file_group([], files, list(ids)), files
             )
-            for f in self.schema.fields:
-                hs = renames.get(f.name, [])
-                if hs and f.name in key_set:
-                    frame = frame.withColumn(
-                        f.name,
-                        F.coalesce(
-                            F.col(f.name), *[F.col(h) for h in reversed(hs)]
-                        ),
-                    )
-            frame = frame.select(*e.equality_ids)
-            entries.append((frame, e.equality_ids, e.sequence_number))
-        return mor.group_equality_deletes(entries)
+            groups.append(
+                mor.EqualityDeleteGroup(
+                    frame.select(*ids, mor.SYS_HIDDEN_SEQ_NUM), ids
+                )
+            )
+        return groups
 
     def snapshot_as_of(self, timestamp_ms: int) -> md.Snapshot | None:
         """Latest snapshot committed at or before ``timestamp_ms`` —
@@ -1827,22 +1792,34 @@ class LakeTable:
         snap = self._snapshot(snapshot_id)
         if snap is None:
             return self.spark.createDataFrame([], self.schema)
+        return self._merge_on_read(
+            snap, [f.name for f in self.schema.fields], data_paths, filters
+        )
+
+    def _merge_on_read(
+        self,
+        snap: md.Snapshot,
+        keep: list[str],
+        data_paths: list[str] | None = None,
+        filters: sk.Filters | None = None,
+    ) -> DataFrame:
+        """``snap``'s data files minus its position and equality
+        deletes, projected to ``keep`` (user columns, optionally plus
+        hidden ones): the one MoR assembly behind :meth:`read` and
+        :meth:`scan_visible_keys`."""
         pos = self._pos_delete_frame(snap)
         eq_groups = self._eq_delete_groups(snap)
-        need_hidden = pos is not None or bool(eq_groups)
+        has_deletes = pos is not None or bool(eq_groups)
         data = self.scan_data(
-            snapshot_id,
-            with_hidden=need_hidden,
+            snap.snapshot_id,
+            with_hidden=has_deletes or len(keep) > len(self.schema.fields),
             data_paths=data_paths,
             filters=filters,
         )
-        if not need_hidden:
-            return data
+        if not has_deletes:
+            return data.select(*keep)
         return mor.merge_on_read(
-            data,
-            pos_deletes=pos,
-            eq_delete_groups=eq_groups,
-            user_columns=[f.name for f in self.schema.fields],
+            data, pos_deletes=pos, eq_delete_groups=eq_groups, user_columns=keep
         )
 
     def read_files(
@@ -1886,13 +1863,7 @@ class LakeTable:
             return empty.withColumn(
                 mor.SYS_HIDDEN_FILE_PATH, F.lit(None).cast("string")
             ).withColumn(mor.SYS_HIDDEN_POS, F.lit(None).cast("long"))
-        pos = self._pos_delete_frame(snap)
-        eq_groups = self._eq_delete_groups(snap)
-        data = self.scan_data(snap.snapshot_id, with_hidden=True)
         user_cols = [f.name for f in self.schema.fields]
-        keep = user_cols + [mor.SYS_HIDDEN_FILE_PATH, mor.SYS_HIDDEN_POS]
-        if pos is None and not eq_groups:
-            return data.select(*keep)
-        return mor.merge_on_read(
-            data, pos_deletes=pos, eq_delete_groups=eq_groups, user_columns=keep
+        return self._merge_on_read(
+            snap, user_cols + [mor.SYS_HIDDEN_FILE_PATH, mor.SYS_HIDDEN_POS]
         )

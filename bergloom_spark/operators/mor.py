@@ -14,14 +14,17 @@ Operator map (SURVEY.md §2.3):
 - J2 ``apply_equality_deletes`` — one anti join per equality-id
   schema with the ``data.seq < delete.seq`` visibility residual;
   reference ``datafusion_processor.rs:347-386`` (residual ``:366-369``).
-- J3 ``group_equality_deletes`` — group delete frames by identical
-  ``equality_ids`` so each group gets one join; reference
-  ``datafusion_processor.rs:481-504``.
-- P4/P5 ``with_hidden_columns`` — attach
-  ``sys_hidden_seq_num`` / ``sys_hidden_file_path`` / ``sys_hidden_pos``
-  (reference ``iceberg_file_task_scan.rs:356-406``) from Spark's
-  ``_metadata`` struct — exact Iceberg ``_file`` / ``_pos`` semantics
-  with zero custom scan code.
+- J3 ``group_equality_deletes`` — group per-file delete frames by
+  identical ``equality_ids`` so each group gets one join; reference
+  ``datafusion_processor.rs:481-504``. Lake tables group at planning
+  time instead: ``LakeTable._eq_delete_groups`` reads each
+  equality-id set's files with one scan.
+- P4/P5 hidden columns — ``sys_hidden_file_path`` / ``sys_hidden_pos``
+  come from Spark's ``_metadata`` struct (exact Iceberg ``_file`` /
+  ``_pos`` semantics) and ``sys_hidden_seq_num`` from the manifest, all
+  attached by ``LakeTable._scan_file_group`` / ``_with_seq_nums`` for
+  data and equality-delete files alike (reference
+  ``iceberg_file_task_scan.rs:356-406``).
 
 Scale notes (100 TB design):
 
@@ -61,27 +64,6 @@ class EqualityDeleteGroup:
 
     frame: DataFrame
     equality_ids: tuple[str, ...]
-
-
-def with_hidden_columns(
-    df: DataFrame,
-    seq_num: int | None = None,
-    need_file_path_and_pos: bool = False,
-) -> DataFrame:
-    """Attach hidden columns from the file-source ``_metadata`` struct.
-
-    The reference appends these per Arrow batch with a running position
-    counter (``iceberg_file_task_scan.rs:321,331-406``); Spark's parquet
-    source exposes identical values as ``_metadata.file_path`` and
-    ``_metadata.row_index``, computed inside the vectorized reader.
-    """
-    if seq_num is not None:
-        df = df.withColumn(SYS_HIDDEN_SEQ_NUM, F.lit(seq_num).cast("long"))
-    if need_file_path_and_pos:
-        df = df.withColumn(SYS_HIDDEN_FILE_PATH, F.col("_metadata.file_path")).withColumn(
-            SYS_HIDDEN_POS, F.col("_metadata.row_index")
-        )
-    return df
 
 
 def _maybe_broadcast(df: DataFrame, broadcast: bool) -> DataFrame:

@@ -269,3 +269,17 @@ def test_rewrite_files_managers_built_only_by_the_two_rewrite_paths():
         rel = path.relative_to(PKG).as_posix()
         sites |= _call_sites(rel, path.read_text(), "RewriteFilesCommitManager")
     assert sites == REWRITE_MANAGER_SITES
+
+
+def test_lake_parquet_read_only_through_the_file_set_reader():
+    """Lake data and equality-delete files are read by one
+    schema-resolving reader (``_scan_file_group``); the other parquet
+    reads in ``lake/table.py`` are the fixed-schema position deletes
+    and the partition-statistics file."""
+    path = PKG / "lake" / "table.py"
+    sites = _call_sites("lake/table.py", path.read_text(), "parquet")
+    assert sites == {
+        "lake/table.py:LakeTable.partition_stats_df",
+        "lake/table.py:LakeTable._scan_file_group",
+        "lake/table.py:LakeTable._pos_delete_frame",
+    }

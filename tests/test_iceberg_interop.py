@@ -662,6 +662,27 @@ class TestRenamedHistoryImport:
             (r.id, r.category, r.val) for r in t2.read().collect()
         )
         assert got == expected
+        # a second delete on the same key set, written after the
+        # rename under the CURRENT name (as a later Iceberg writer
+        # would; the import is read-only, so the entry joins the
+        # pinned snapshot in memory): the old-name and the new-name
+        # file apply together in the set's one scan
+        from bergloom_spark.lake import writer as wr
+
+        snap = t2.meta.current_snapshot()
+        snap.entries.extend(
+            wr.write_equality_delete_files(
+                spark.createDataFrame([("c1",)], "category string"),
+                str(tmp_path / "late"),
+                snap.sequence_number + 1,
+                ["category"],
+            )
+        )
+        assert len(snap.files(md.EQ_DELETE)) == 2
+        got = sorted(
+            (r.id, r.category, r.val) for r in t2.read().collect()
+        )
+        assert got == [r for r in expected if r[1] != "c1"]
 
     def test_footer_field_ids_covered_by_history_pass(self, spark, tmp_path):
         """A pre-rename file WITH PARQUET:field_id footer metadata is
@@ -820,6 +841,32 @@ class TestRenamedHistoryImport:
         # column "y" (id 1) carries the ORIGINAL x values; column
         # "x" (id 2) the original y values
         assert rows == sorted((i * 10, i) for i in range(40))
+        # two equality deletes on current "y" (id 1), one per name
+        # epoch: a pre-swap file stores the key as "x", a post-swap
+        # file as "y". The set's one scan resolves both by id.
+        snap = t.meta.current_snapshot()
+        for seq, (name, key) in enumerate([("x", 3), ("y", 7)], 2):
+            ddir = str(tmp_path / f"eq-{seq}")
+            spark.createDataFrame(
+                [(key,)],
+                T.StructType([
+                    T.StructField(name, T.LongType(), True,
+                                  {"parquet.field.id": 1}),
+                ]),
+            ).coalesce(1).write.parquet(ddir)
+            dpath = glob.glob(ddir + "/part-*.parquet")[0]
+            snap.entries.append(md.ManifestEntry(
+                content=md.EQ_DELETE,
+                file_path=dpath,
+                record_count=1,
+                file_size_bytes=os.path.getsize(dpath),
+                sequence_number=seq,
+                equality_ids=["y"],
+            ))
+        rows = sorted((r.x, r.y) for r in t.read().collect())
+        assert rows == sorted(
+            (i * 10, i) for i in range(40) if i not in (3, 7)
+        )
 
     def test_rename_with_type_change_not_aliased(self, spark, tmp_path):
         """A rename that ALSO changed the primitive type is excluded

@@ -77,7 +77,16 @@ def test_f1b_positional_deletes_roundtrip(spark, tmp_path):
     assert result.validated
 
 
-def test_f1c_equality_deletes_seq_gating(spark, tmp_path):
+@pytest.mark.parametrize("cap", ["default", 0])
+def test_f1c_equality_deletes_seq_gating(spark, tmp_path, monkeypatch, cap):
+    """Two delete files in one equality-id set are read by one scan
+    whose rows take each file's own sequence number — through the
+    literal map and (cap 0) the broadcast join alike. A missed probe
+    would be a NULL seq, and a silently unapplied delete."""
+    from bergloom_spark.lake import table as table_mod
+
+    if cap != "default":
+        monkeypatch.setattr(table_mod, "_MAP_LITERAL_CAP", cap)
     t = make_users(spark, tmp_path)
     t.append(seed_df(spark))  # seq 1
     t.append_equality_deletes(
@@ -86,6 +95,13 @@ def test_f1c_equality_deletes_seq_gating(spark, tmp_path):
     t.append(seed_df(spark))  # seq 3: id=2 re-inserted AFTER the delete
     got = rows(t.read())
     assert got == sorted([(1, "Alice"), (3, "Charlie")] + SEED)
+    t.append_equality_deletes(
+        spark.createDataFrame([(3,)], "id int"), ["id"]
+    )  # seq 4: both copies of id=3 are older
+    got = rows(t.read())
+    assert got == [(1, "Alice"), (1, "Alice"), (2, "Bob")]
+    (group,) = t._eq_delete_groups(t.meta.current_snapshot())
+    assert sorted(map(tuple, group.frame.collect())) == [(2, 2), (3, 4)]
     Compaction(t, CompactionConfig(enable_validate_compaction=True)).compact()
     assert rows(t.read()) == got
 
@@ -255,8 +271,25 @@ def test_hidden_scan_uses_file_dictionary_not_per_row_decode(spark, tmp_path):
     assert "url_decode" not in plan  # dictionary path engaged
     # and the dictionary resolves to the exact manifest paths
     snap = t.meta.current_snapshot()
-    paths = {r["sys_hidden_file_path"] for r in scan.collect()}
+    got = scan.collect()
+    paths = {r["sys_hidden_file_path"] for r in got}
     assert paths == {e.file_path for e in snap.entries}
+    # sys_hidden_pos is each file's _metadata.row_index (Iceberg _pos)
+    # and sys_hidden_seq_num the file's manifest sequence number
+    by_file = {}
+    for r in got:
+        by_file.setdefault(r["sys_hidden_file_path"], []).append(r)
+    seq = {e.file_path: e.sequence_number for e in snap.entries}
+    for path, rs in by_file.items():
+        pos = sorted(r["sys_hidden_pos"] for r in rs)
+        assert pos == list(range(len(rs)))
+        assert {r["sys_hidden_seq_num"] for r in rs} == {seq[path]}
+    raw = spark.read.parquet(*paths).select(
+        "id", F.col("_metadata.row_index").alias("pos")
+    )
+    assert sorted(map(tuple, raw.collect())) == sorted(
+        (r["id"], r["sys_hidden_pos"]) for r in got
+    )
 
 
 def test_uri_path_map_rejects_mismatch(spark, tmp_path):

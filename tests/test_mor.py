@@ -21,7 +21,6 @@ from bergloom_spark.operators.mor import (
     apply_position_deletes,
     group_equality_deletes,
     merge_on_read,
-    with_hidden_columns,
 )
 
 
@@ -123,19 +122,6 @@ def test_multi_column_equality_ids(spark):
     groups = group_equality_deletes([(eq, ["id", "name"], 2)])
     out = apply_equality_deletes(data, groups)
     assert sorted(r.id for r in out.collect()) == [2, 3]
-
-
-def test_with_hidden_columns_from_parquet_metadata(spark, tmp_path):
-    # P4/P5: _metadata.file_path/row_index give exact Iceberg _file/_pos.
-    path = str(tmp_path / "t")
-    spark.range(0, 100).withColumn("v", F.col("id") * 2).coalesce(1).write.parquet(path)
-    df = with_hidden_columns(
-        spark.read.parquet(path), seq_num=7, need_file_path_and_pos=True
-    )
-    rows = df.orderBy("id").collect()
-    assert [r[SYS_HIDDEN_POS] for r in rows] == list(range(100))
-    assert all(r[SYS_HIDDEN_SEQ_NUM] == 7 for r in rows)
-    assert len({r[SYS_HIDDEN_FILE_PATH] for r in rows}) == 1
 
 
 def test_anti_join_plan_is_broadcast_when_hinted(spark):

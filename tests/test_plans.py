@@ -106,6 +106,36 @@ def test_lake_seq_attach_never_shuffles(spark, tmp_path, monkeypatch):
     assert X.count_shuffles(df2) == 0
 
 
+def test_lake_eq_deletes_one_scan_per_key_set(spark, tmp_path):
+    """Each equality-id set is ONE parquet scan over all of its delete
+    files, however many are pending: five files on ``id`` plus one on
+    ``v`` ⇒ two delete-file scans and two anti joins."""
+    from bergloom_spark.lake import LakeTable
+
+    df = spark.range(100).select(F.col("id"), (F.col("id") % 7).alias("v"))
+    t = LakeTable.create(spark, str(tmp_path / "t"), df.schema)
+    t.append(df)
+    for k in range(5):
+        t.append_equality_deletes(
+            spark.createDataFrame([(k,)], "id long"), ["id"]
+        )
+    t.append_equality_deletes(spark.createDataFrame([(6,)], "v long"), ["v"])
+    out = t.read()
+    scans = [
+        line
+        for line in X.executed_plan(out).splitlines()
+        if "FileScan parquet" in line
+    ]
+    # one data-file scan + one scan per equality-id set
+    assert len(scans) == 3, scans
+    assert sum("ReadSchema: struct<id:bigint>" in ln for ln in scans) == 1
+    assert sum("ReadSchema: struct<v:bigint>" in ln for ln in scans) == 1
+    assert X.anti_join_count(out) == 2
+    assert sorted(r.id for r in out.collect()) == [
+        i for i in range(5, 100) if i % 7 != 6
+    ]
+
+
 def test_q19_part_join_broadcasts(spark):
     """The part side of the disjunctive-predicate join is a dimension;
     it must broadcast (a shuffle of lineitem on partkey would dominate

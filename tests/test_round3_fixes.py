@@ -4,7 +4,9 @@
   ``_metadata.file_path`` needs a runtime fallback — if the runtime
   rendering ever drifts from the driver-validated dictionary keys, the
   hidden columns must degrade to the per-row decode, not to NULLs that
-  silently skip MoR delete application.
+  silently skip MoR delete application. That holds for the
+  equality-delete scan too: its rows take their sequence number by
+  the same path probe as data rows.
 - ADVICE r2 #3 (low): ``apply_changes`` on a key-only table (every
   column a key column) raised ``xxhash64()``-with-zero-args.
 """
@@ -15,6 +17,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import types as T
 
 from bergloom_spark.lake import LakeTable
+from bergloom_spark.lake import metadata as md
 from bergloom_spark.lake import table as lt
 
 
@@ -62,12 +65,23 @@ def test_uri_map_drift_falls_back_to_decode(spark, tmp_path, monkeypatch):
         )
     )
     t.delete_where(F.col("id") % 10 == 0)
-    expected = sorted(i for i in range(100) if i % 10 != 0)
+    # an equality delete, then a re-insert of one of its keys: the
+    # delete scan's path→seq probe rides on the same dictionary
+    t.append_equality_deletes(
+        spark.createDataFrame([(5,), (15,)], "id long"), ["id"]
+    )
+    t.append(spark.createDataFrame([(5, "again")], schema))
+    expected = sorted(
+        [i for i in range(100) if i % 10 != 0 and i not in (5, 15)] + [5]
+    )
     assert sorted(r.id for r in t.read().collect()) == expected
 
     real = lt._uri_path_map
 
+    scanned = []
+
     def drifted(df, expected_paths):
+        scanned.append(set(expected_paths))
         m = real(df, expected_paths)
         if m is None:
             return None
@@ -78,3 +92,11 @@ def test_uri_map_drift_falls_back_to_decode(spark, tmp_path, monkeypatch):
     # every map probe now misses → coalesce falls back to the per-row
     # decode; the read must be IDENTICAL, not delete-free
     assert sorted(r.id for r in t.read().collect()) == expected
+    # the delete scan went through the drifted dictionary too, and its
+    # rows still found their file's sequence number
+    snap = t.meta.current_snapshot()
+    eq_files = snap.files(md.EQ_DELETE)
+    assert {e.file_path for e in eq_files} in scanned
+    (group,) = t._eq_delete_groups(snap)
+    seqs = {r[0] for r in group.frame.select("sys_hidden_seq_num").collect()}
+    assert seqs == {e.sequence_number for e in eq_files}
