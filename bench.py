@@ -427,40 +427,6 @@ def main() -> None:
                     f"shuffled per pass (seed 20260814), System.gc() "
                     f"between passes, best of {passes}"
                 ),
-                "calibration_protocol": (
-                    "min of 3 probe runs (r6+). BENCH_r05's anchor was "
-                    "a SINGLE sample, so the r5→r6 ratio carries a "
-                    "one-time downward bias (min ≤ single draw); from "
-                    "r6 on the comparison is min-vs-min. From r7 the "
-                    "anchor EXCLUDES the current round's own file "
-                    "(advice r6) and an all-cores parallel probe runs "
-                    "beside the single-thread one (verdict r6 #3: the "
-                    "one-core clock is blind to bandwidth/SMT "
-                    "contention a 32-thread bench runs under); its "
-                    "cross-round ratio starts at r7→r8 — but r7's "
-                    "single parallel sample was itself taken under "
-                    "contention (judge r8 adjudication), so r8's "
-                    "0.316 is the clean parallel anchor. From r9 both "
-                    "probes ALSO sample per phase, immediately before "
-                    "each phase's timed passes (cpu_calibration_by_"
-                    "phase): the r8 phase-2 episode (+15-40% on "
-                    "untouched round-2+ queries, r1 set flat, code "
-                    "unchanged) sat in a contention window the "
-                    "once-per-bench probes straddled. ADJUDICATED in "
-                    "the r9 local run: every watched phase-2 query "
-                    "reverted to its r7 level (ratios 0.68-0.90 vs "
-                    "r8, 0.86-1.04 vs r7) with the per-phase probes "
-                    "flat across phases — the r8 movement was host "
-                    "contention, same as the r6 episode; no bisect "
-                    "needed. Caveat (advice r14): drift normalization "
-                    "divides by the probe ratio vs the NEWEST prior "
-                    "round's file — when that anchor window was itself "
-                    "contended (e.g. r13, probes 1.72x/3.02x its own "
-                    "prior), the normalized totals are inflated and "
-                    "can read as a regression; ratios vs a committed "
-                    "QUIET-window anchor are the meaningful "
-                    "cross-round comparison in that case."
-                ),
                 # Single-thread CPU probe timed before Spark started:
                 # the r3->r4 r1-comparable drift reproduced in round 5
                 # as a UNIFORM +10-25% on all 14 queries (plans

@@ -542,9 +542,10 @@ def rewrite_deletes_to_vectors(
 def remove_orphan_files(
     table: LakeTable, older_than_s: float = 3 * 24 * 3600
 ) -> int:
-    """Delete parquet files under the table root referenced by NO
-    snapshot (debris from crashed writes and failed commits) — the
-    analog of Iceberg's ``remove_orphan_files`` maintenance procedure.
+    """Delete parquet and deletion-vector Puffin files under ``data/``
+    and ``deletes/`` referenced by NO snapshot (debris from crashed
+    writes and failed commits; ``stats/`` Puffins hang off properties)
+    — the analog of Iceberg's ``remove_orphan_files`` procedure.
 
     ``older_than_s`` protects in-flight writers: a concurrent append
     writes its files BEFORE committing the snapshot that references
@@ -566,8 +567,9 @@ def remove_orphan_files(
     from bergloom_spark.lake.fileio import strip_local_scheme
 
     local_root = strip_local_scheme(meta.table_root)
-    for sub in ("data", "deletes"):
-        pattern = os.path.join(local_root, sub, "**", "*.parquet")
+    exts = ("parquet", "puffin")
+    for sub, ext in [(d, x) for d in ("data", "deletes") for x in exts]:
+        pattern = os.path.join(local_root, sub, "**", f"*.{ext}")
         for path in glob.glob(pattern, recursive=True):
             apath = os.path.abspath(path)
             if apath in referenced:

@@ -48,8 +48,8 @@ def _normalize_path(col):
     This is the PER-ROW fallback: regexp + replace + decode on a
     ~100-byte string per row costs ~0.4 s per million rows of pure
     expression time. The scan prefers the per-FILE dictionary built by
-    :func:`_uri_path_map` (one literal-map probe per row) and only
-    falls back here when the dictionary can't be verified.
+    :func:`_uri_path_map` (a literal-map lookup per row, a linear scan
+    of its keys) and falls back here when it can't be verified.
     """
     uri = F.regexp_replace(col, "^file:/*", "/")
     return F.url_decode(F.replace(uri, F.lit("+"), F.lit("%2B")))
@@ -64,10 +64,10 @@ def _normalize_path_py(uri: str) -> str:
 
 
 # Above this many files in one scan group, per-file literal maps give
-# way to broadcast joins: a map literal rides inside every task's
-# serialized plan, so its size must stay bounded; a broadcast hash
-# relation is built once per executor and is the right shape for a
-# 100 TB table with 10^5-10^6 files.
+# way to broadcast joins. The cap bounds the plan size (a map literal
+# rides in every task's serialized plan) and the per-row probe cost
+# (Spark's map lookup scans its keys linearly); a broadcast relation is
+# built once per executor, the right shape for 10^5-10^6 files.
 _MAP_LITERAL_CAP = 1024
 
 # Comma-separated column names that get a per-file equality Bloom
@@ -1383,9 +1383,9 @@ class LakeTable:
         reference's per-scan-task tagging
         (``iceberg_file_task_scan.rs:356-372``), for data and
         equality-delete files alike. Small file counts: a literal-map
-        probe (one hash per row, zero join nodes). Large: broadcast
-        join, which keeps the scan's partitioning (no shuffle) at any
-        file count."""
+        probe (a linear key scan per row, zero join nodes). Large:
+        broadcast join, which keeps the scan's partitioning (no
+        shuffle) at any file count."""
         if len(files) <= _MAP_LITERAL_CAP:
             smap = F.create_map(
                 *[F.lit(x) for e in files for x in (e.file_path, e.sequence_number)]
@@ -1493,9 +1493,9 @@ class LakeTable:
             # Fanout writes store partition values in directory names,
             # not file bodies (Hive layout); recover them from the
             # manifest. Small groups: one literal-map probe per column
-            # (no join node at all). Large groups: broadcast join —
-            # the map literal would otherwise ride in every task's
-            # serialized plan.
+            # (a linear key scan per row, no join node). Large groups:
+            # broadcast join — the map literal would otherwise ride in
+            # every task's serialized plan and its scan grow per row.
             part_fields = {
                 f.name: f for f in self.schema.fields if f.name in set(part_cols)
             }

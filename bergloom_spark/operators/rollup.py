@@ -12,9 +12,9 @@ side of the reference's roadmap "incremental compaction" read path,
 2. aggregates the delta with signed weights (+1 insert / −1 delete) —
    one map-side-combinable shuffle over delta rows only,
 3. full-outer merges the delta groups against the current rollup state
-   and upserts ONLY the touched groups (equality-delete + append via
-   ``LakeTable.upsert``); groups whose count reaches zero are removed
-   with an equality-delete.
+   and commits ONLY the touched groups with the new source watermark
+   in one ``LakeTable.apply_changes`` (equality-delete + append);
+   groups whose count reaches zero get only the delete.
 
 Cost per refresh ∝ changed data + touched groups — independent of
 fact-table size. Sums stay exact under reordering because measures are
@@ -36,21 +36,19 @@ from pyspark.sql import functions as F
 from bergloom_spark.lake.table import LakeTable
 
 
-def _watermark_path(rollup_root: str) -> str:
-    return os.path.join(rollup_root, "_source_watermark.json")
+# Rollup-table property: the last source snapshot folded into the state.
+WATERMARK_PROP = "bergloom.rollup.source-snapshot-id"
 
 
-def _load_watermark(rollup_root: str) -> int | None:
-    path = _watermark_path(rollup_root)
+def _load_watermark(rollup: LakeTable, rollup_root: str) -> int | None:
+    if WATERMARK_PROP in rollup.meta.properties:
+        return int(rollup.meta.properties[WATERMARK_PROP])
+    # Rollups created before the property kept a side file.
+    path = os.path.join(rollup_root, "_source_watermark.json")
     if not os.path.exists(path):
         return None
     with open(path) as fh:
         return json.load(fh)["source_snapshot_id"]
-
-
-def _store_watermark(rollup_root: str, snapshot_id: int) -> None:
-    with open(_watermark_path(rollup_root), "w") as fh:
-        json.dump({"source_snapshot_id": snapshot_id}, fh)
 
 
 class IncrementalRollup:
@@ -100,7 +98,7 @@ class IncrementalRollup:
         rollup; returns the rollup table (read() for the state)."""
         src_snap = self.source.refresh().meta.current_snapshot()
         rollup = self._rollup_table()
-        last = _load_watermark(self.rollup_root)
+        last = _load_watermark(rollup, self.rollup_root)
         if src_snap is None or src_snap.snapshot_id == last:
             return rollup
 
@@ -128,21 +126,20 @@ class IncrementalRollup:
             ],
             F.col("cnt_d").isNotNull().alias("__touched"),
         )
-        # Materialize the merge ONCE: upsert(live), dead.isEmpty() and
-        # append_equality_deletes(dead) each re-execute their lineage,
-        # which here is the whole changelog-scan + delta-agg + merge
-        # DAG (measured ~3× the refresh cost). The checkpointed frame
-        # is group-level — rows = touched groups, never fact rows.
+        # Materialize the merge ONCE: apply_changes' delete and data
+        # writes would each re-execute the changelog-scan + delta-agg +
+        # merge DAG. Rows = touched groups, never fact rows.
         touched = merged.filter(F.col("__touched")).localCheckpoint(
             eager=True
         )
-        live = touched.filter(F.col("cnt") > 0).drop("__touched")
-        dead = touched.filter(F.col("cnt") <= 0).select(*self.keys).distinct()
-
-        # Upsert = equality-delete on keys + append of the new group
-        # rows; vanished groups get only the delete half.
-        rollup.upsert(live, self.keys)
-        if not dead.isEmpty():
-            rollup.append_equality_deletes(dead, self.keys)
-        _store_watermark(self.rollup_root, src_snap.snapshot_id)
+        # One commit, watermark in the same CAS: an interrupted refresh
+        # leaves both old. Touched groups are deleted on the keys and
+        # live ones ('U') re-inserted; vanished ones ('D') are not.
+        op = F.when(F.col("cnt") > 0, "U").otherwise("D")
+        rollup.apply_changes(
+            touched.withColumn("__op", op).drop("__touched"),
+            self.keys,
+            op_col="__op",
+            properties_update={WATERMARK_PROP: str(src_snap.snapshot_id)},
+        )
         return rollup.refresh()

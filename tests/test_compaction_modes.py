@@ -286,8 +286,10 @@ def test_every_strategy_honors_validate_mock_and_commit_metrics(
 
 
 def test_remove_orphan_files(spark, tmp_path):
-    """Unreferenced parquet debris is deleted; referenced and
-    too-recent files survive."""
+    """Unreferenced parquet and deletion-vector Puffin debris is
+    deleted; referenced (a committed DV included) and too-recent files
+    survive."""
+    import glob
     import os
     import time
 
@@ -295,21 +297,28 @@ def test_remove_orphan_files(spark, tmp_path):
 
     t = _table(spark, tmp_path)
     t.append(_df(spark, 100, "a"))
-    data_dir = os.path.join(t.meta.table_root, "data")
-    orphan_old = os.path.join(data_dir, "orphan-old.parquet")
-    orphan_new = os.path.join(data_dir, "orphan-new.parquet")
-    for p in (orphan_old, orphan_new):
+    t.delete_where_as_vectors(F.col("id") < 10)
+    root = t.meta.table_root
+    (live_dv,) = glob.glob(os.path.join(root, "deletes", "dv-*.puffin"))
+    orphan_old = os.path.join(root, "data", "orphan-old.parquet")
+    orphan_new = os.path.join(root, "data", "orphan-new.parquet")
+    orphan_dv = os.path.join(root, "deletes", "dv-orphan.puffin")
+    for p in (orphan_old, orphan_new, orphan_dv):
         with open(p, "wb") as fh:
             fh.write(b"PAR1junkPAR1")
     old = time.time() - 10 * 24 * 3600
-    os.utime(orphan_old, (old, old))
+    for p in (orphan_old, orphan_dv, live_dv):
+        os.utime(p, (old, old))
     removed = remove_orphan_files(t)  # default 3-day horizon
-    assert removed == 1
+    assert removed == 2
     assert not os.path.exists(orphan_old)
+    assert not os.path.exists(orphan_dv)
+    assert os.path.exists(live_dv)  # referenced by the DV snapshot
     assert os.path.exists(orphan_new)  # too recent: in-flight protection
-    assert t.read().count() == 100  # referenced files untouched
+    assert t.read().count() == 90  # referenced files untouched
     assert remove_orphan_files(t, older_than_s=0) == 1  # horizon 0 takes it
-    assert t.read().count() == 100
+    assert os.path.exists(live_dv)
+    assert t.read().count() == 90
 
 
 def test_binpack_partition_scoped(spark, tmp_path):

@@ -100,3 +100,80 @@ def test_vanished_group_is_removed(spark, roots):
     rt = r.refresh()
     groups = {row.grp for row in rt.read().collect()}
     assert groups == {"a"}
+
+
+def test_interrupted_refresh_reruns_to_recompute(spark, tmp_path, monkeypatch):
+    """Each commit a refresh performs fails in turn; the re-run refresh
+    must equal a from-scratch aggregation — no half-applied delta is
+    folded twice. The delta empties one group, so a refresh that
+    commits the live and the vanished groups separately double-counts
+    when interrupted between the two."""
+    src = spark.range(100).select(
+        "id",
+        (F.col("id") % 5).alias("grp"),
+        F.col("id").cast("double").alias("v"),
+    )
+    real_commit = LakeTable._commit
+
+    def state(t):
+        return {r.grp: (r.cnt, r.sum_v) for r in t.read().collect()}
+
+    def expected(t):
+        rows = t.read().groupBy("grp").agg(
+            F.count(F.lit(1)).alias("cnt"), F.sum("v").alias("sum_v")
+        )
+        return {r.grp: (r.cnt, r.sum_v) for r in rows.collect()}
+
+    faulted = 0
+    for k in range(1, 5):
+        root = tmp_path / f"k{k}"
+        t = LakeTable.create(spark, str(root / "fact"), src.schema)
+        t.append(src)
+        r = IncrementalRollup(
+            t, str(root / "rollup"), keys=["grp"], sum_cols=["v"]
+        )
+        r.refresh()
+        t = t.refresh()
+        t.append(src.limit(10).withColumn("id", F.col("id") + 100))
+        t.delete_where(F.col("grp") == 2)
+
+        calls = []
+
+        def failing_commit(self, update, k=k, calls=calls):
+            calls.append(1)
+            if len(calls) == k:
+                raise OSError(f"injected failure of commit {k}")
+            return real_commit(self, update)
+
+        monkeypatch.setattr(LakeTable, "_commit", failing_commit)
+        try:
+            r.refresh()
+        except OSError:
+            faulted += 1
+        finally:
+            monkeypatch.setattr(LakeTable, "_commit", real_commit)
+        if len(calls) < k:
+            break  # the refresh performs fewer than k commits
+        rt = r.refresh()
+        assert state(rt) == expected(t.refresh()), f"commit {k} failed"
+        assert 2 not in state(rt)
+    assert faulted >= 1
+
+
+def test_watermark_property_wins_over_legacy_side_file(tmp_path):
+    """A rollup created before the watermark property still resumes
+    from its ``_source_watermark.json``; once the property is committed
+    it is the one read."""
+    import json
+    from types import SimpleNamespace
+
+    from bergloom_spark.operators.rollup import WATERMARK_PROP, _load_watermark
+
+    def table(props):
+        return SimpleNamespace(meta=SimpleNamespace(properties=props))
+
+    assert _load_watermark(table({}), str(tmp_path)) is None
+    with open(tmp_path / "_source_watermark.json", "w") as fh:
+        json.dump({"source_snapshot_id": 7}, fh)
+    assert _load_watermark(table({}), str(tmp_path)) == 7
+    assert _load_watermark(table({WATERMARK_PROP: "9"}), str(tmp_path)) == 9
