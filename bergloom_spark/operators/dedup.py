@@ -848,15 +848,51 @@ def decontaminate_flags(
 # ---------------------------------------------------------------------------
 # connected components (near-dup pairs -> clusters)
 # ---------------------------------------------------------------------------
+# Edge count up to which connected_components finishes on the driver:
+# 2M deduped int64 pairs are 32 MB as Arrow, and the NumPy working set
+# (unique nodes, inverse indices, labels) is a small multiple of that —
+# well inside a 2 GB driver.
+_LOCAL_CC_MAX_EDGES = 2_000_000
+
+
+def _local_components(e: DataFrame) -> DataFrame:
+    """``(node, component)`` of the normalized edge frame ``e``
+    (``__u < __v``, deduped) computed on the driver: min-label
+    propagation over dense node indices. Each round hooks every tree
+    root onto the smallest label across its edges (``np.minimum.at``
+    on the roots, so a whole tree moves at once), then pointer-jumps
+    ``lbl = lbl[lbl]`` until every node points at a root. Labels only
+    decrease and always name a node of the same component, so the
+    fixpoint — both endpoints of every edge share a root — labels each
+    node with its component's minimum."""
+    import numpy as np
+    import pyarrow as pa
+
+    t = e.toArrow()
+    ends = np.stack([t.column("__u").to_numpy(), t.column("__v").to_numpy()])
+    nodes, idx = np.unique(ends, return_inverse=True)
+    u, v = idx.reshape(ends.shape)
+    src, dst = np.concatenate([u, v]), np.concatenate([v, u])
+    lbl = np.arange(len(nodes))
+    while not np.array_equal(lbl[u], lbl[v]):
+        np.minimum.at(lbl, lbl[src], lbl[dst])
+        while True:
+            jumped = lbl[lbl]
+            if np.array_equal(jumped, lbl):
+                break
+            lbl = jumped
+    return e.sparkSession.createDataFrame(
+        pa.table({"node": nodes, "component": nodes[lbl]})
+    )
+
+
 def connected_components(
     edges: DataFrame,
     src: str = "id_a",
     dst: str = "id_b",
     max_iter: int = 25,
 ) -> DataFrame:
-    """Connected components of an undirected graph of integer node ids,
-    via the alternating large-star / small-star algorithm (Kiveris et
-    al., "Connected Components in MapReduce and Beyond", SoCC'14).
+    """Connected components of an undirected graph of integer node ids.
 
     This is the step a real dedup pipeline runs AFTER pair generation:
     near-dup pairs (from MinHash-LSH / SimHash / embedding blocking)
@@ -866,18 +902,30 @@ def connected_components(
     (a doc whose only pair partner is a larger id survives even when
     that partner chains down to a smaller keeper).
 
-    Shape for 100 TB: each half-round is one hash-partitioned
-    ``groupBy(node).agg(min(...))`` plus an equi-join back on the same
-    key — no collects, no per-node adjacency lists materialized on one
-    task (the min-aggregate replaces ``collect_set``). The edge set
-    provably converges to a star forest in O(log n) rounds; per-round
-    lineage is cut with ``localCheckpoint`` so the plan stays flat.
-    Convergence is detected with one tiny aggregate per round (count +
-    order-independent xxhash fingerprint of the edge multiset).
+    Size-adaptive: the normalized edge set is checkpointed and counted
+    once. Up to ``_LOCAL_CC_MAX_EDGES`` edges (a graph the driver holds
+    in tens of MB) the components are finished on the driver — one
+    Arrow collect, NumPy min-label propagation (:func:`_local_components`)
+    and one ``createDataFrame`` — because every distributed round costs
+    several Spark jobs however small the graph is.
 
-    Returns ``(node, component)`` — one row per node that appears in
-    any edge; ``component`` is the min node id reachable from ``node``.
-    Callers union in singletons (nodes with no edges map to themselves).
+    Above the cap, the alternating large-star / small-star algorithm
+    (Kiveris et al., "Connected Components in MapReduce and Beyond",
+    SoCC'14), the shape for 100 TB: each half-round is one
+    hash-partitioned ``groupBy(node).agg(min(...))`` plus an equi-join
+    back on the same key — no collects, no per-node adjacency lists
+    materialized on one task (the min-aggregate replaces
+    ``collect_set``). The edge set provably converges to a star forest
+    in O(log n) rounds; per-round lineage is cut with
+    ``localCheckpoint`` so the plan stays flat. Convergence is detected
+    with one tiny aggregate per round (count + order-independent xxhash
+    fingerprint of the edge multiset); a graph that has not converged
+    after ``max_iter`` rounds raises ``RuntimeError``.
+
+    Returns ``(node, component)`` as longs — one row per node that
+    appears in any edge; ``component`` is the min node id reachable
+    from ``node``. Callers union in singletons (nodes with no edges map
+    to themselves).
     """
     u, v = F.col("__u"), F.col("__v")
 
@@ -930,12 +978,18 @@ def connected_components(
         return links.union(selfs).where(u != v).distinct()
 
     prev = _fingerprint(e)
+    if prev[0] <= _LOCAL_CC_MAX_EDGES:
+        return _local_components(e)
     for _ in range(max_iter):
         e = _small_star(_large_star(e)).localCheckpoint(eager=True)
         cur = _fingerprint(e)
         if cur == prev:
             break
         prev = cur
+    else:
+        raise RuntimeError(
+            f"connected_components did not converge in {max_iter} rounds"
+        )
 
     # At fixpoint the edges form a star forest: (node, component-min).
     comp = e.select(u.alias("node"), v.alias("component"))
@@ -984,10 +1038,12 @@ def keep_best_per_cluster(
     Compose: transitive components over the pair graph
     (:func:`connected_components`), left-join back to the corpus
     (untouched docs are their own singleton cluster), then one window
-    per cluster ranked by (score desc, id asc). Shapes: the CC rounds
-    are hash-partitioned aggs; the final pass is one shuffle on the
-    cluster label. ``score_col`` must be deterministic per row (e.g. a
-    ROUNDED quality score) so the rank is engine-reproducible.
+    per cluster ranked by (score desc, id asc). Shapes: the CC step
+    finishes on the driver for a pair graph of at most
+    ``_LOCAL_CC_MAX_EDGES`` edges and runs hash-partitioned star rounds
+    above that; the final pass is one shuffle on the cluster label.
+    ``score_col`` must be deterministic per row (e.g. a ROUNDED quality
+    score) so the rank is engine-reproducible.
     """
     from pyspark.sql import Window
 

@@ -12,9 +12,12 @@ side of the reference's roadmap "incremental compaction" read path,
 2. aggregates the delta with signed weights (+1 insert / −1 delete) —
    one map-side-combinable shuffle over delta rows only,
 3. full-outer merges the delta groups against the current rollup state
-   and commits ONLY the touched groups with the new source watermark
-   in one ``LakeTable.apply_changes`` (equality-delete + append);
-   groups whose count reaches zero get only the delete.
+   and commits ONLY the touched groups — those whose count or some sum
+   changed — with the new source watermark in one
+   ``LakeTable.apply_changes`` (equality-delete + append); groups whose
+   count reaches zero get only the delete. When no group moved (e.g.
+   the source was only compacted) the watermark advances in a
+   property-only commit, with no snapshot and no delete file.
 
 Cost per refresh ∝ changed data + touched groups — independent of
 fact-table size. Sums stay exact under reordering because measures are
@@ -27,12 +30,15 @@ checks.
 from __future__ import annotations
 
 import json
+import operator
 import os
+from functools import reduce
 from typing import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from bergloom_spark.lake.statistics import _commit_properties
 from bergloom_spark.lake.table import LakeTable
 
 
@@ -124,7 +130,14 @@ class IncrementalRollup:
                 ).alias(f"sum_{c}")
                 for c in self.sum_cols
             ],
-            F.col("cnt_d").isNotNull().alias("__touched"),
+            # A group is touched only if its delta moves it: a source
+            # compaction deletes and re-inserts rows, so its groups
+            # appear in the delta with every sum at 0.
+            reduce(
+                operator.or_,
+                [F.col("cnt_d") != 0]
+                + [F.col(f"sum_{c}_d") != 0 for c in self.sum_cols],
+            ).alias("__touched"),
         )
         # Materialize the merge ONCE: apply_changes' delete and data
         # writes would each re-execute the changelog-scan + delta-agg +
@@ -132,6 +145,11 @@ class IncrementalRollup:
         touched = merged.filter(F.col("__touched")).localCheckpoint(
             eager=True
         )
+        watermark = {WATERMARK_PROP: str(src_snap.snapshot_id)}
+        if touched.isEmpty():
+            # Nothing moved: advance the watermark without a snapshot.
+            _commit_properties(rollup, watermark)
+            return rollup
         # One commit, watermark in the same CAS: an interrupted refresh
         # leaves both old. Touched groups are deleted on the keys and
         # live ones ('U') re-inserted; vanished ones ('D') are not.
@@ -140,6 +158,6 @@ class IncrementalRollup:
             touched.withColumn("__op", op).drop("__touched"),
             self.keys,
             op_col="__op",
-            properties_update={WATERMARK_PROP: str(src_snap.snapshot_id)},
+            properties_update=watermark,
         )
         return rollup.refresh()

@@ -6,10 +6,17 @@ from __future__ import annotations
 import os
 
 import pyspark.sql.functions as F
+import pytest
 
 from bergloom_spark.io import load_table
 from bergloom_spark.operators import dedup, similarity
 from tests.oracle_utils import compare, duck_connection
+
+# connected_components' two paths: the star rounds (cap 0) and the
+# driver-side label propagation (a cap no test graph reaches).
+CC_CAPS = pytest.mark.parametrize(
+    "cap", [0, 2**62], ids=["star_rounds", "driver"]
+)
 
 
 def _docs_with_dups(spark, sf_dir):
@@ -352,12 +359,15 @@ def test_knn_ivf_scans_fraction_of_corpus(spark, sf_dir):
     assert 4 * avg < 0.6 * n  # nprobe=4 of 16 centroids
 
 
-def test_connected_components_matches_union_find(spark):
-    """Alternating-star CC vs a driver-side union-find on a graph with
-    a chain, a star, a cycle, and random edges (exercises multi-round
-    convergence: the 30-node chain needs several star rounds)."""
+@CC_CAPS
+def test_connected_components_matches_union_find(spark, monkeypatch, cap):
+    """CC (star rounds at cap 0, the driver path above) vs a plain
+    union-find on a graph with a chain, a star, a cycle, and random
+    edges (exercises multi-round convergence: the 30-node chain needs
+    several star rounds)."""
     import random
 
+    monkeypatch.setattr(dedup, "_LOCAL_CC_MAX_EDGES", cap)
     random.seed(11)
     n = 300
     edges = [(random.randrange(n), random.randrange(n)) for _ in range(150)]
@@ -393,9 +403,11 @@ def test_connected_components_matches_union_find(spark):
     assert got == expected
 
 
-def test_cc_clusters_transitive_vs_keep_first(spark):
+@CC_CAPS
+def test_cc_clusters_transitive_vs_keep_first(spark, monkeypatch, cap):
     """CC closes chains transitively: in a->b->c with only pairwise
     edges (a,b),(b,c), all three land in one component keyed by a."""
+    monkeypatch.setattr(dedup, "_LOCAL_CC_MAX_EDGES", cap)
     df = spark.createDataFrame([(1, 5), (5, 9)], ["id_a", "id_b"])
     got = {
         r["node"]: r["component"]

@@ -177,3 +177,47 @@ def test_watermark_property_wins_over_legacy_side_file(tmp_path):
         json.dump({"source_snapshot_id": 7}, fh)
     assert _load_watermark(table({}), str(tmp_path)) == 7
     assert _load_watermark(table({WATERMARK_PROP: "9"}), str(tmp_path)) == 9
+
+
+def test_source_compaction_leaves_rollup_snapshots_alone(spark, tmp_path):
+    """A source compaction moves the source snapshot but no group's
+    count or sums: the refresh must advance the watermark without a new
+    rollup snapshot, delete file or data file, and the refresh after it
+    must return early."""
+    from bergloom_spark.lake import metadata as md
+    from bergloom_spark.lake.compaction import Compaction
+    from bergloom_spark.operators.rollup import WATERMARK_PROP
+
+    src = spark.range(200).select(
+        "id",
+        (F.col("id") % 5).alias("grp"),
+        F.col("id").cast("double").alias("v"),
+    )
+    t = LakeTable.create(spark, str(tmp_path / "fact"), src.schema)
+    t.append(src)
+    r = IncrementalRollup(
+        t, str(tmp_path / "rollup"), keys=["grp"], sum_cols=["v"]
+    )
+
+    def observed(rt):
+        snap = rt.meta.current_snapshot()
+        return (
+            [s.snapshot_id for s in rt.meta.snapshots],
+            sorted(e.file_path for e in snap.files(md.DATA)),
+            sorted(e.file_path for e in snap.files(md.EQ_DELETE)),
+            sorted((g.grp, g.cnt, g.sum_v) for g in rt.read().collect()),
+        )
+
+    before = observed(r.refresh())
+    src_snap = t.meta.current_snapshot_id
+    Compaction(t).compact()
+    t = t.refresh()
+    assert t.meta.current_snapshot_id != src_snap
+
+    rt = r.refresh()
+    assert observed(rt) == before
+    assert rt.meta.properties[WATERMARK_PROP] == str(
+        t.meta.current_snapshot_id
+    )
+    version = rt.meta.version
+    assert r.refresh().meta.version == version
