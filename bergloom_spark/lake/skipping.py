@@ -252,13 +252,24 @@ def footer_column_stats(meta) -> dict[str, list]:
             if "." in name or name in invalid:
                 continue
             st = col.statistics
-            if st is None or not st.has_min_max:
+            try:
+                bounds = (
+                    (st.min, st.max)
+                    if st is not None and st.has_min_max
+                    else None
+                )
+            except NotImplementedError:
+                # pyarrow cannot decode some typed stats (a decimal
+                # stored as INT32/INT64, as Spark writes precision ≤ 18).
+                bounds = None
+            if bounds is None:
                 invalid.add(name)
                 valid.pop(name, None)
                 continue
-            if isinstance(st.min, str) and isinstance(st.max, str):
-                lo = utf8_truncate_lower(st.min)
-                hi = utf8_truncate_upper(st.max)
+            smin, smax = bounds
+            if isinstance(smin, str) and isinstance(smax, str):
+                lo = utf8_truncate_lower(smin)
+                hi = utf8_truncate_upper(smax)
                 if hi is None:
                     invalid.add(name)
                     valid.pop(name, None)
@@ -268,8 +279,12 @@ def footer_column_stats(meta) -> dict[str, list]:
                     lo, hi = min(plo, lo), max(phi, hi)
                 valid[name] = [lo, hi, STRING_BOUND_MARKER]
                 continue
-            lo, hi = stat_value(st.min), stat_value(st.max)
-            if lo is None or hi is None:
+            lo, hi = stat_value(smin), stat_value(smax)
+            # NaN bounds (parquet-mr orders NaN above +inf, as Spark's
+            # filters do) compare false against every literal, so they
+            # would prune files that match: a float column holding NaN
+            # carries no range.
+            if lo is None or hi is None or lo != lo or hi != hi:
                 invalid.add(name)
                 valid.pop(name, None)
                 continue

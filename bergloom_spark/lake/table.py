@@ -1028,24 +1028,36 @@ class LakeTable:
         one timestamp, so time travel never resolves to the delete
         alone; append-only readers still see an append.
 
-        The two Spark writes are independent, so the delete file is
-        written on a worker thread (carrying this thread's job group
-        and local properties) while the data file is written here.
-        Returns the append snapshot.
+        A batch already on the driver (``wr.driver_rows``: a
+        ``createDataFrame`` of local data) is collected once as Arrow;
+        both files are pyarrow writes of it, milliseconds each, and the
+        data stays with Spark only on a partitioned table. Otherwise the
+        two Spark writes are independent, so the delete file is written
+        on a worker thread (carrying this thread's job group and local
+        properties) while the data file is written here; that overlap
+        matters only on this Spark path. Returns the append snapshot.
         """
         seq = self.meta.last_sequence_number + 1
-        write_deletes = inheritable_thread_target(self.spark)(
-            wr.write_equality_delete_files
-        )
-        with ThreadPoolExecutor(max_workers=1) as pool:
-            deleting = pool.submit(
-                write_deletes,
-                df.select(*key_cols), self.meta.table_root, seq, key_cols,
+        rows = wr.driver_rows(df)
+        if rows is not None:
+            deletes = wr.write_equality_delete_files(
+                rows, self.meta.table_root, seq, key_cols
             )
-            try:
-                data = self._write_data(df, seq + 1)
-            finally:
-                deletes = deleting.result()
+            data = self._write_data(
+                df if self.meta.partition_spec else rows, seq + 1
+            )
+        else:
+            write_deletes = inheritable_thread_target(self.spark)(
+                wr.write_equality_delete_files
+            )
+            with ThreadPoolExecutor(max_workers=1) as pool:
+                deleting = pool.submit(
+                    write_deletes, df, self.meta.table_root, seq, key_cols
+                )
+                try:
+                    data = self._write_data(df, seq + 1)
+                finally:
+                    deletes = deleting.result()
 
         def update(base: md.TableMetadata) -> md.TableMetadata:
             now = int(time.time() * 1000)

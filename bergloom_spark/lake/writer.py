@@ -12,23 +12,39 @@ parallel. ``spark.sql.files.maxRecordsPerFile`` is the hard guard.
 The reference's exact threshold function is kept (and unit-tested) as
 :func:`need_build_new_file` for parity, and used by
 :func:`plan_output_files` to simulate packing.
+
+Driver-resident rows skip Spark's writer. When a write's optimized
+plan is a ``LocalRelation`` (a ``createDataFrame`` of pandas or Arrow
+data: a CDC or micro-batch sink's typical input) its rows already live
+on the driver, and shipping them to executors only to write them back
+to local disk costs a parquet job per file set. :func:`driver_rows`
+collects such a frame once as Arrow, and :func:`write_data_files` (on
+unpartitioned tables; Hive directory escaping stays Spark's) and
+:func:`write_equality_delete_files` write it with ``pyarrow.parquet``
+into the same directories, through the same footer harvest, with the
+same file-count rule applied as row slices. The rule is a property of
+the input, not a size knob: a local relation is in driver memory
+whatever its size, and anything else (scans, joins, ``spark.range``,
+compaction's rewrites) is in no driver memory at all.
 """
 
 from __future__ import annotations
 
+import dataclasses
 import glob
 import os
 import uuid
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from bergloom_spark.config import (
     ROLL_HARD_FRACTION,
     ROLL_MIN_FRACTION,
     ROLL_SOFT_FRACTION,
 )
-from bergloom_spark.lake.fileio import io_for
+from bergloom_spark.lake.fileio import io_for, strip_local_scheme
 from bergloom_spark.lake.metadata import POS_DELETE, ManifestEntry
 from bergloom_spark.lake.skipping import (
     footer_column_counts,
@@ -81,11 +97,14 @@ def parquet_bytes_estimate(df: DataFrame) -> int | None:
     est = max(1, estimate_bytes(df))
     if est >= 1 << 50:
         # Catalyst reports ~Long.MaxValue when stats are unknown (e.g.
-        # localRelation inputs).
+        # RDD-backed inputs).
         return None
-    # Parquet compresses the in-memory estimate substantially; 3× is
-    # a conservative ratio so we don't under-fill target-size files.
-    return est // 3
+    return est // _PARQUET_RATIO
+
+
+# Parquet compresses an in-memory size substantially; 3× is a
+# conservative ratio so we don't under-fill target-size files.
+_PARQUET_RATIO = 3
 
 
 def derive_n_files(
@@ -125,8 +144,6 @@ def _collect_parquet_entries(
     "write.bloom-filter-columns" table property because it is the one
     harvest that costs more than the already-open footer."""
     import pyarrow.parquet as pq
-
-    from bergloom_spark.lake.fileio import strip_local_scheme
 
     # A file://-scheme table root reaches here intact (Spark wrote
     # through it); the glob/pyarrow harvest operates on the mounted
@@ -192,8 +209,131 @@ def _collect_parquet_entries(
     return entries
 
 
+@dataclasses.dataclass(frozen=True)
+class DriverRows:
+    """A write's rows collected on the driver as one Arrow table, with
+    the pyarrow options that encode its timestamps as the session's
+    Spark writer would."""
+
+    table: "pa.Table"  # noqa: F821 (pyarrow is imported lazily)
+    options: dict
+
+    def select(self, *cols: str) -> DriverRows:
+        return DriverRows(self.table.select(list(cols)), self.options)
+
+
+# Leaf types whose pyarrow parquet encoding Spark reads back as the
+# same type (nested arrays, maps and structs of them included).
+_DRIVER_TYPES = (
+    T.BooleanType, T.ByteType, T.ShortType, T.IntegerType, T.LongType,
+    T.FloatType, T.DoubleType, T.DecimalType, T.StringType, T.BinaryType,
+    T.DateType, T.TimestampType, T.TimestampNTZType,
+)
+
+
+def _leaf_types(dt: T.DataType):
+    if isinstance(dt, T.StructType):
+        for f in dt.fields:
+            yield from _leaf_types(f.dataType)
+    elif isinstance(dt, T.ArrayType):
+        yield from _leaf_types(dt.elementType)
+    elif isinstance(dt, T.MapType):
+        yield from _leaf_types(dt.keyType)
+        yield from _leaf_types(dt.valueType)
+    else:
+        yield dt
+
+
+def _parquet_options(df: DataFrame) -> dict | None:
+    """pyarrow options that encode ``df``'s columns as Spark's parquet
+    writer would, or None when pyarrow cannot. Spark writes
+    ``timestamp`` per ``spark.sql.parquet.outputTimestampType`` (INT96
+    by default, with no footer stats) but ``timestamp_ntz`` always as
+    INT64 micros, while pyarrow's INT96 and millisecond switches cover
+    both types at once."""
+    kinds = {type(t) for t in _leaf_types(df.schema)}
+    if not all(issubclass(k, _DRIVER_TYPES) for k in kinds):
+        return None
+    if T.TimestampType not in kinds:
+        return {}
+    out = df.sparkSession.conf.get("spark.sql.parquet.outputTimestampType")
+    if out == "TIMESTAMP_MICROS":
+        return {}
+    if T.TimestampNTZType in kinds:
+        return None
+    if out == "INT96":
+        return {"use_deprecated_int96_timestamps": True}
+    return {"coerce_timestamps": "ms", "allow_truncated_timestamps": True}
+
+
+def driver_rows(df: DataFrame | DriverRows) -> DriverRows | None:
+    """``df``'s rows collected as Arrow when its optimized plan is a
+    ``LocalRelation`` (module docstring), else None. A caller writing
+    the same rows twice (an upsert's data and delete keys) collects
+    once and passes the result instead of the frame."""
+    if isinstance(df, DriverRows):
+        return df
+    qe = df._jdf.queryExecution()
+    # Only a plan whose one leaf is a local relation can optimize to
+    # one; checking the analyzed leaves first keeps the optimizer pass
+    # (~0.4 s on a MoR tree) off writes of scans and joins.
+    leaves = qe.analyzed().collectLeaves()
+    if leaves.size() != 1 or leaves.head().nodeName() != "LocalRelation":
+        return None
+    if qe.optimizedPlan().nodeName() != "LocalRelation":
+        return None
+    options = _parquet_options(df)
+    if options is None:
+        return None
+    return DriverRows(df.toArrow(), options)
+
+
+def _write_driver_files(
+    rows: DriverRows,
+    out_dir: str,
+    n_files: int,
+    compression: str,
+    content: str,
+    sequence_number: int,
+    **harvest,
+) -> list[ManifestEntry]:
+    """Write ``rows`` with pyarrow as ``n_files`` contiguous row slices
+    (zero rows write no file) and harvest them as Spark's output is."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    tbl = rows.table
+    if tbl.num_rows:
+        local = strip_local_scheme(out_dir)
+        os.makedirs(local)
+        step = -(-tbl.num_rows // n_files)
+        for i, start in enumerate(range(0, tbl.num_rows, step)):
+            pq.write_table(
+                tbl.slice(start, step),
+                os.path.join(local, f"part-{i:05d}.parquet"),
+                compression=compression,
+                **rows.options,
+            )
+    entries = _collect_parquet_entries(out_dir, content, sequence_number, **harvest)
+    # pyarrow leaves NaN out of float min/max, but Spark's filters
+    # match NaN above +inf, so such a range could prune a matching
+    # file: a float column holding NaN carries no range, as in Spark's
+    # own files (footer_column_stats).
+    nan_cols = [
+        f.name
+        for f in tbl.schema
+        if pa.types.is_floating(f.type)
+        and pc.any(pc.is_nan(tbl.column(f.name))).as_py()
+    ]
+    for e in entries:
+        for c in nan_cols:
+            e.column_stats.pop(c, None)
+    return entries
+
+
 def write_data_files(
-    df: DataFrame,
+    df: DataFrame | DriverRows,
     table_root: str,
     sequence_number: int,
     target_file_size: int,
@@ -210,10 +350,23 @@ def write_data_files(
     file per partition value it owns instead of one per (task,
     partition) pair, which at 1000 executors is the difference between
     `n_partitions` files and `n_tasks × n_partitions` small files.
+
+    Unpartitioned rows already on the driver (:func:`driver_rows`) are
+    written with pyarrow instead, no Spark job involved.
     """
     out_dir = os.path.join(
         table_root, "data", f"seq{sequence_number}-{uuid.uuid4().hex[:12]}"
     )
+    rows = None if partition_spec else driver_rows(df)
+    if rows is not None:
+        n_files = derive_n_files(
+            df, target_file_size,
+            parquet_bytes=rows.table.nbytes // _PARQUET_RATIO,
+        )
+        return _write_driver_files(
+            rows, out_dir, n_files, compression, "data", sequence_number,
+            bloom_cols=bloom_cols,
+        )
     # One stats pass, shared by the file-count and parallelism-floor
     # decisions below (estimate_bytes re-optimizes the whole plan — it
     # must not run twice, and not at all when the caller knows the
@@ -401,16 +554,31 @@ def write_deletion_vector_files(
 
 
 def write_equality_delete_files(
-    df: DataFrame, table_root: str, sequence_number: int, equality_ids: list[str]
+    df: DataFrame | DriverRows,
+    table_root: str,
+    sequence_number: int,
+    equality_ids: list[str],
 ) -> list[ManifestEntry]:
     """Write an equality-delete file projecting only the key columns
-    (reference projects ``equality_ids`` only, compaction/mod.rs:429-434)."""
+    (reference projects ``equality_ids`` only, compaction/mod.rs:429-434).
+    Keys already on the driver (:func:`driver_rows`) are written with
+    pyarrow, in Spark's default snappy codec."""
     out_dir = os.path.join(
         table_root, "deletes", f"eq-seq{sequence_number}-{uuid.uuid4().hex[:12]}"
     )
+    keys = df.select(*equality_ids)
+    rows = driver_rows(keys)
+    if rows is not None:
+        return _write_driver_files(
+            rows, out_dir, 1, "snappy", "eq_delete", sequence_number,
+            equality_ids=equality_ids,
+        )
     (
-        df.select(*equality_ids)
-        .coalesce(1)
+        keys
+        # repartition (not coalesce): coalesce(1) would run the
+        # caller's whole upstream plan in one task; this funnels only
+        # the key columns to the one writer.
+        .repartition(1)
         .write.mode("error")
         .parquet(out_dir)
     )
