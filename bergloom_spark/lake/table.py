@@ -1029,13 +1029,15 @@ class LakeTable:
         alone; append-only readers still see an append.
 
         A batch already on the driver (``wr.driver_rows``: a
-        ``createDataFrame`` of local data) is collected once as Arrow;
-        both files are pyarrow writes of it, milliseconds each, and the
-        data stays with Spark only on a partitioned table. Otherwise the
-        two Spark writes are independent, so the delete file is written
-        on a worker thread (carrying this thread's job group and local
-        properties) while the data file is written here; that overlap
-        matters only on this Spark path. Returns the append snapshot.
+        ``createDataFrame`` of local data) is turned into Arrow once, in
+        the driver JVM with no Spark job; both files are pyarrow writes
+        of it, milliseconds each, so on an unpartitioned table the
+        upsert runs no Spark job (a partitioned table's data stays with
+        Spark). Otherwise the two Spark writes are independent, so the
+        delete file is written on a worker thread (carrying this
+        thread's job group and local properties) while the data file is
+        written here; that overlap matters only on this Spark path.
+        Returns the append snapshot.
         """
         seq = self.meta.last_sequence_number + 1
         rows = wr.driver_rows(df)

@@ -18,8 +18,9 @@ plan is a ``LocalRelation`` (a ``createDataFrame`` of pandas or Arrow
 data: a CDC or micro-batch sink's typical input) its rows already live
 on the driver, and shipping them to executors only to write them back
 to local disk costs a parquet job per file set. :func:`driver_rows`
-collects such a frame once as Arrow, and :func:`write_data_files` (on
-unpartitioned tables; Hive directory escaping stays Spark's) and
+turns such a frame's rows into Arrow once, in the driver JVM with no
+Spark job, and :func:`write_data_files` (on unpartitioned tables; Hive
+directory escaping stays Spark's) and
 :func:`write_equality_delete_files` write it with ``pyarrow.parquet``
 into the same directories, through the same footer harvest, with the
 same file-count rule applied as row slices. The rule is a property of
@@ -267,10 +268,22 @@ def _parquet_options(df: DataFrame) -> dict | None:
 
 
 def driver_rows(df: DataFrame | DriverRows) -> DriverRows | None:
-    """``df``'s rows collected as Arrow when its optimized plan is a
+    """``df``'s rows as one Arrow table when its optimized plan is a
     ``LocalRelation`` (module docstring), else None. A caller writing
-    the same rows twice (an upsert's data and delete keys) collects
-    once and passes the result instead of the frame."""
+    the same rows twice (an upsert's data and delete keys) converts
+    once and passes the result instead of the frame.
+
+    The relation's rows are already in the driver JVM, so they become
+    Arrow there, as Spark Connect serves a ``LocalTableScanExec``:
+    ``ArrowConverters$.MODULE$.toBatchWithSchemaIterator`` encodes them
+    in batches of the session's ``maxRecordsPerBatch`` and
+    ``PythonRDD.serveIterator`` streams the batches over one
+    authenticated local socket. No Spark job, SQL execution or
+    physical planning runs (pyspark's ``toArrow`` runs a collect job
+    even over a local scan), and no row is pickled. Both are JVM
+    internals of the pinned pyspark; ``tests/test_driver_writes.py``
+    pins them by name. The table is cast to the schema ``toArrow``
+    casts to."""
     if isinstance(df, DriverRows):
         return df
     qe = df._jdf.queryExecution()
@@ -280,12 +293,61 @@ def driver_rows(df: DataFrame | DriverRows) -> DriverRows | None:
     leaves = qe.analyzed().collectLeaves()
     if leaves.size() != 1 or leaves.head().nodeName() != "LocalRelation":
         return None
-    if qe.optimizedPlan().nodeName() != "LocalRelation":
+    plan = qe.optimizedPlan()
+    if plan.nodeName() != "LocalRelation":
         return None
     options = _parquet_options(df)
     if options is None:
         return None
-    return DriverRows(df.toArrow(), options)
+    return DriverRows(_local_relation_arrow(df, plan), options)
+
+
+def _local_relation_arrow(df: DataFrame, plan) -> "pa.Table":  # noqa: F821
+    """Serve a ``LocalRelation``'s rows from the driver JVM as Arrow IPC
+    streams (one per batch, each carrying its schema) and read them
+    back with pyarrow (:func:`driver_rows`)."""
+    import pyarrow as pa
+    from pyspark.serializers import NoOpSerializer
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.util import _load_from_socket
+
+    jvm = df.sparkSession._jvm
+    jconf = df.sparkSession._jconf
+    large = jconf.arrowUseLargeVarTypes()
+    schema = to_arrow_schema(
+        df.schema,
+        error_on_duplicated_field_names_in_struct=True,
+        prefers_large_types=large,
+    )
+    # Fully qualified names resolve in one py4j round trip; walking
+    # ``jvm.org.apache...`` costs one per package (~2 ms a class).
+    converters = getattr(
+        jvm, "org.apache.spark.sql.execution.arrow.ArrowConverters$"
+    )
+    streams = getattr(converters, "MODULE$").toBatchWithSchemaIterator(
+        plan.data().iterator(), plan.schema(),
+        jconf.arrowMaxRecordsPerBatch(), jconf.arrowMaxBytesPerBatch(),
+        jconf.sessionLocalTimeZone(),
+        True,  # errorOnDuplicatedFieldNames, as toArrow's schema check
+        large,
+    )
+    python_rdd = getattr(jvm, "org.apache.spark.api.python.PythonRDD")
+    port, secret, server = python_rdd.serveIterator(
+        streams, "serve-local-relation-arrow"
+    )
+    try:
+        batches = [
+            batch
+            for stream in _load_from_socket((port, secret), NoOpSerializer())
+            for batch in pa.ipc.open_stream(stream)
+        ]
+    finally:
+        # Joins the serving thread; re-raises a JVM-side failure that
+        # would otherwise read as a short stream.
+        server.getResult()
+    if not batches:
+        return schema.empty_table()
+    return pa.Table.from_batches(batches).cast(schema)
 
 
 def _write_driver_files(
@@ -352,7 +414,7 @@ def write_data_files(
     `n_partitions` files and `n_tasks × n_partitions` small files.
 
     Unpartitioned rows already on the driver (:func:`driver_rows`) are
-    written with pyarrow instead, no Spark job involved.
+    served to pyarrow as Arrow and written by it: no Spark job.
     """
     out_dir = os.path.join(
         table_root, "data", f"seq{sequence_number}-{uuid.uuid4().hex[:12]}"

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import dataclasses
 import os
 
 import pyspark.sql.functions as F
@@ -38,9 +39,13 @@ def _bloom_table(spark, sf_dir, tmp_path):
     t = LakeTable.create(spark, str(tmp_path / "t"), base.schema)
     t.append(
         base.repartition(8, F.col("l_orderkey")),
-        # tiny target so even sf0.001 input rolls into several
-        # key-disjoint files (the shape bloom pruning exists for)
-        target_file_size=8 * 1024,
+        # tiny target so even sf0.001 input (~9 KB estimated) asks for
+        # at least 4 files from the byte estimate alone: the write's
+        # parallelism floor adds files only up to the core count, so an
+        # 8 KB target gave 3 files on 3 cores. Each file coalesces whole
+        # hash partitions, so every file's keys span the key range (the
+        # shape bloom pruning exists for).
+        target_file_size=2 * 1024,
         properties_update={BLOOM_COLS_PROP: "l_orderkey"},
     )
     return t, base
@@ -60,7 +65,10 @@ def test_bloom_prunes_point_lookup_where_stats_cannot(spark, sf_dir, tmp_path):
         .agg(F.max("l_orderkey"))
         .first()[0]
     )
-    kept, total = t.plan_files(filters=[("l_orderkey", "=", probe)])
+    point = [("l_orderkey", "=", probe)]
+    no_blooms = [dataclasses.replace(e, column_blooms={}) for e in entries]
+    assert len(sk.prune_entries(no_blooms, point)) == len(entries)
+    kept, total = t.plan_files(filters=point)
     assert total == len(entries)
     assert len(kept) < total, "bloom pruned nothing"
     # results identical to the unpruned scan + filter

@@ -1,8 +1,10 @@
 """Driver-resident lake writes (``lake/writer.driver_rows``).
 
 A frame whose optimized plan is a ``LocalRelation`` is written with
-pyarrow; every other frame, and a partitioned table's data, goes
-through Spark's parquet writer. Both paths must read back the same
+pyarrow, its rows served to Python as Arrow by the driver JVM with no
+Spark job (the two JVM internals that path calls are pinned by name);
+every other frame, and a partitioned table's data, goes through
+Spark's parquet writer. Both paths must read back the same
 rows and produce the same manifest entries. Also covered: the Spark
 equality-delete funnel keeps its upstream stage parallel, and the
 footer harvest handles NaN floats and INT64-stored decimals."""
@@ -17,6 +19,7 @@ import numpy as np
 import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
+import pyspark
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -31,6 +34,7 @@ from bergloom_spark.lake.validator import fingerprint
 PYARROW = "parquet-cpp-arrow"
 PARQUET_MR = "parquet-mr"
 TS_TYPE_CONF = "spark.sql.parquet.outputTimestampType"
+BATCH_CONF = "spark.sql.execution.arrow.maxRecordsPerBatch"
 
 UTC = datetime.timezone.utc
 BASE_FIELDS = [
@@ -88,6 +92,14 @@ FILTERS = [
     ("ntz", "<", "1969-07-20T20:17:00"),
 ]
 BLOOMS = "l,i,s,b,dt,bin,nul,ts,ntz"
+
+
+def _nan_safe(table: pa.Table) -> list[dict]:
+    # NaN != NaN, so pa.Table.equals never holds for a NaN column.
+    return [
+        {k: "NaN" if isinstance(v, float) and v != v else v for k, v in r.items()}
+        for r in table.to_pylist()
+    ]
 
 
 def _created_by(entries) -> set[str]:
@@ -251,6 +263,53 @@ def test_driver_files_follow_the_file_count_rule_and_codec(spark, tmp_path):
     assert lo_hi == [[i * n // 4, (i + 1) * n // 4 - 1] for i in range(4)]
 
 
+@pytest.mark.parametrize("timestamp_type", ["TIMESTAMP_MICROS"], indirect=True)
+def test_served_rows_match_to_arrow_across_batches(spark, timestamp_type):
+    schema, _, on_executors = _frames(spark, ["ts", "ntz"])
+    local = spark.createDataFrame(
+        pa.concat_tables([on_executors.toArrow()] * 8), schema
+    )
+    spark.conf.set(BATCH_CONF, "7")
+    try:
+        got = wr.driver_rows(local).table
+        want = local.toArrow()
+    finally:
+        spark.conf.unset(BATCH_CONF)
+    assert got.column(0).num_chunks > 1  # 40 rows in batches of 7
+    assert got.schema == want.schema
+    assert _nan_safe(got) == _nan_safe(want)
+
+
+def test_zero_served_rows_keep_the_to_arrow_schema(spark):
+    _, local, _ = _frames(spark, [])
+    empty = local.filter(F.col("l") < 0)
+    got = wr.driver_rows(empty).table
+    want = empty.toArrow()
+    assert got.num_rows == 0 and want.num_rows == 0
+    assert got.schema == want.schema
+
+
+def test_pinned_jvm_arrow_serving_api(spark):
+    # driver_rows calls these JVM internals of the pinned pyspark; a
+    # pyspark that drops or reshapes one must fail here, by name.
+    pinned = [
+        ("org.apache.spark.sql.execution.arrow.ArrowConverters$",
+         "toBatchWithSchemaIterator", 7),
+        ("org.apache.spark.api.python.PythonRDD", "serveIterator", 2),
+    ]
+    for cls, method, arity in pinned:
+        found = [
+            m.getParameterCount()
+            for m in spark._jvm.java.lang.Class.forName(cls).getMethods()
+            if m.getName() == method
+        ]
+        assert arity in found, (
+            f"pyspark {pyspark.__version__} has no {cls}.{method} taking "
+            f"{arity} arguments (found arities {found}); "
+            "lake/writer.driver_rows needs it to serve local rows as Arrow"
+        )
+
+
 def test_zero_driver_rows_write_no_file(spark, tmp_path):
     empty = spark.createDataFrame(pd.DataFrame({"k": [1]})).filter("k < 0")
     assert wr.driver_rows(empty) is not None
@@ -310,8 +369,7 @@ def test_pandas_upsert_writes_pyarrow_files_without_write_jobs(spark, tmp_path):
         for j in jobs
         for s in tracker.getJobInfo(j).stageIds
     ]
-    assert len(jobs) <= 1  # the one Arrow collect
-    assert not [s.name for s in stages if s and s.name.startswith("parquet")]
+    assert len(jobs) == 0, [s.name for s in stages if s]
 
     new = _new_files(t, before)
     assert {e.content for e in new} == {md.DATA, md.EQ_DELETE}
