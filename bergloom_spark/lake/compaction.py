@@ -9,10 +9,15 @@ rewrite runs the same steps, owned by :meth:`Compaction._full_compact`:
 1. refresh the table; return early if the snapshot is empty;
 2. select the files to rewrite (``_select``);
 3. MoR-read the selected data files at that snapshot — one declarative
-   DataFrame Spark executes distributed (scan → delete anti joins);
+   DataFrame Spark executes distributed (scan → delete anti joins).
+   A round-robin rewrite whose input is at most
+   ``_LOCAL_REWRITE_MAX_BYTES`` instead merges on the driver, per data
+   file, with pyarrow (:func:`_local_rows`), and runs no Spark job;
 4. lay the rows out: size-targeted round-robin, or range / z-order
    clustered on ``sort_cols`` (:func:`_cluster`);
-5. write the output files;
+5. write the output files — with pyarrow for driver-merged rows, else
+   with Spark's writer; both through ``writer.write_data_files``'s
+   directories, file-count rule and footer harvest;
 6. commit RewriteFiles with retry, pinning the starting sequence
    number, plus the strategy's table properties (``_properties``) —
    :func:`_commit_rewrite`, the only place this module builds a
@@ -51,14 +56,24 @@ from bergloom_spark.functions.zorder import zorder_value
 from bergloom_spark.lake import metadata as md
 from bergloom_spark.lake import writer as wr
 from bergloom_spark.lake.commit import RetryConfig, RewriteFilesCommitManager
-from bergloom_spark.lake.fileio import strip_local_scheme
+from bergloom_spark.lake.datafile import meta_renames, read_data_file
+from bergloom_spark.lake.fileio import path_scheme, strip_local_scheme
 from bergloom_spark.lake.metrics import (
     GLOBAL_REGISTRY,
     CompactionMetrics,
     MetricsRegistry,
 )
-from bergloom_spark.lake.table import LakeTable
+from bergloom_spark.lake.table import LakeTable, _normalize_path_py
 from bergloom_spark.lake.validator import validate_compaction
+
+# A round-robin rewrite whose input (the selected data files plus the
+# snapshot's live delete files, by manifest ``file_size_bytes``) is at
+# most this size is merged and written on the driver with pyarrow, with
+# no Spark job (:func:`_local_rows`). Spark would run it as one task
+# anyway: the writer gives an input under ``target_file_size / 8`` one
+# output file, and pyarrow reads and encodes it several times faster.
+# Driver memory for such a rewrite is measured in SCALING.md.
+_LOCAL_REWRITE_MAX_BYTES = 64 << 20
 
 
 @dataclass
@@ -136,13 +151,25 @@ class Compaction:
             return CompactionResult(snapshot_id=snap.snapshot_id)
         inputs = [e for e in removed if e.content == md.DATA]
         try:
-            rewritten = table.read(
-                snapshot_id=snap.snapshot_id,
-                data_paths=[e.file_path for e in inputs],
-            )
+            rows = None
+            if (
+                self.executor != "mock"
+                and not self.sort_cols
+                # codecs pyarrow and Spark name alike
+                and self.config.write_compression in ("snappy", "zstd", "gzip")
+            ):
+                rows = _local_rows(table, snap, inputs)
+            rewritten = None
+            if rows is None or self.config.enable_validate_compaction:
+                rewritten = table.read(
+                    snapshot_id=snap.snapshot_id,
+                    data_paths=[e.file_path for e in inputs],
+                )
             if self.executor == "mock":
                 return CompactionResult(snapshot_id=snap.snapshot_id)
-            added = self._write(table, snap, rewritten, inputs)
+            added = self._write(
+                table, snap, rewritten if rows is None else rows, inputs
+            )
         except Exception:
             metrics.compaction_executor_error_counter += 1
             raise
@@ -176,7 +203,7 @@ class Compaction:
         self,
         table: LakeTable,
         snap: md.Snapshot,
-        rewritten: DataFrame,
+        rewritten: DataFrame | wr.DriverRows,
         inputs: list[md.ManifestEntry],
     ) -> list[md.ManifestEntry]:
         # The manifest already records the physical input size — skip
@@ -363,6 +390,148 @@ def _cluster(
         .sortWithinPartitions(*part_cols, "__z")
         .select(*df.columns)
     )
+
+
+def _local_rows(
+    table: LakeTable, snap: md.Snapshot, inputs: list[md.ManifestEntry]
+) -> wr.DriverRows | None:
+    """``inputs``' merge-on-read rows at ``snap``, built on the driver
+    one data file at a time, the reference's scan-task shape: read the
+    file in the table schema (:func:`datafile.read_data_file`), drop
+    its positionally deleted rows, then the rows hit by every equality
+    delete with a higher sequence number than the file's.
+
+    None, and the rewrite runs as Spark jobs, above
+    ``_LOCAL_REWRITE_MAX_BYTES`` and wherever the two paths could
+    differ: partitioned or field-id tables, paths pyarrow cannot open,
+    types pyarrow does not write as Spark does
+    (:func:`writer.parquet_options`) and equality keys it does not
+    match as Spark's null-safe join does (:func:`_local_eq_ok`)."""
+    import numpy as np
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    pos_files = snap.files(md.POS_DELETE)
+    eq_files = snap.files(md.EQ_DELETE)
+    files = inputs + pos_files + eq_files
+    if (
+        table.meta.partition_spec
+        or any(e.partition for e in inputs)
+        or table._field_id_read_map() is not None
+        or any(path_scheme(e.file_path) for e in files)
+        or sum(e.file_size_bytes for e in files) > _LOCAL_REWRITE_MAX_BYTES
+    ):
+        return None
+    schema = table.schema
+    options = wr.parquet_options(schema, table.spark)
+    target = to_arrow_schema(schema)
+    if options is None or not all(_local_eq_ok(e, target) for e in eq_files):
+        return None
+    schema_json = schema.json()
+    renames = meta_renames(table.meta)
+    positions = _local_positions(pos_files, {e.file_path for e in inputs})
+    eq_keys = [
+        (e, read_data_file(e.file_path, e.equality_ids, schema_json, (), renames))
+        for e in eq_files
+    ]
+    parts = []
+    for e in inputs:
+        tbl = read_data_file(e.file_path, schema.names, schema_json, (), renames)
+        dead = np.zeros(tbl.num_rows, dtype=bool)
+        for pos in positions.get(e.file_path, ()):
+            dead[pos[(pos >= 0) & (pos < tbl.num_rows)]] = True
+        by_ids: dict[tuple[str, ...], list] = {}
+        for d, keys in eq_keys:
+            if d.sequence_number > e.sequence_number:
+                by_ids.setdefault(tuple(d.equality_ids), []).append(keys)
+        for ids, keys in by_ids.items():
+            dead |= _eq_hits(tbl, list(ids), pa.concat_tables(keys))
+        parts.append(tbl.filter(pa.array(~dead)) if dead.any() else tbl)
+    rows = pa.concat_tables(parts) if parts else target.empty_table()
+    return wr.DriverRows(rows, options)
+
+
+def _local_eq_ok(e: md.ManifestEntry, target) -> bool:
+    """Does pyarrow match ``e``'s keys exactly as the Spark anti join's
+    ``eqNullSafe`` does? Not for floats (``is_in`` keeps -0.0 apart
+    from 0.0), nested types or columns the table no longer has. Several
+    key columns are matched by a join, which never matches a null: only
+    when the manifest shows the file holds none."""
+    import pyarrow as pa
+
+    ids = list(e.equality_ids)
+    if not ids or not all(k in target.names for k in ids):
+        return False
+    hashable = (
+        pa.types.is_integer, pa.types.is_boolean, pa.types.is_string,
+        pa.types.is_binary, pa.types.is_date, pa.types.is_timestamp,
+        pa.types.is_decimal,
+    )
+    if not all(any(ok(target.field(k).type) for ok in hashable) for k in ids):
+        return False
+    return len(ids) == 1 or all(e.column_null_counts.get(k) == 0 for k in ids)
+
+
+def _eq_hits(tbl, ids: list[str], keys):
+    """Boolean mask of ``tbl``'s rows equal to some row of ``keys`` on
+    every column of ``ids``: ``is_in`` for one column, with nulls
+    matching nulls as in ``eqNullSafe``; a semi join for several."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    if len(ids) == 1:
+        (k,) = ids
+        hit = pc.is_in(
+            tbl[k], value_set=keys[k].combine_chunks(), skip_nulls=False
+        )
+        return hit.to_numpy(zero_copy_only=False)
+    probe = tbl.select(ids).append_column(
+        "__row", pa.array(np.arange(tbl.num_rows))
+    )
+    rows = probe.join(keys.select(ids), keys=ids, join_type="left semi")
+    out = np.zeros(tbl.num_rows, dtype=bool)
+    out[rows["__row"].to_numpy()] = True
+    return out
+
+
+def _local_positions(
+    entries: list[md.ManifestEntry], wanted: set[str]
+) -> dict[str, list]:
+    """{data file path: [arrays of deleted row positions]} for the
+    ``wanted`` files, from positional-delete files and deletion vectors
+    alike. A pos-delete row naming its file by a ``file:`` URI (an
+    imported table's) is normalized as the Spark scan does."""
+    import numpy as np
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from bergloom_spark.lake import puffin
+
+    out: dict[str, list] = {}
+    for e in entries:
+        if e.dv_referenced_file is not None:
+            if e.dv_referenced_file in wanted:
+                with open(e.file_path, "rb") as f:
+                    f.seek(e.dv_offset)
+                    blob = f.read(e.dv_size)
+                pos = puffin.decode_deletion_vector(blob)
+                out.setdefault(e.dv_referenced_file, []).append(
+                    pos.astype(np.int64)
+                )
+            continue
+        t = pq.read_table(e.file_path, columns=["file_path", "pos"])
+        t = t.filter(pc.is_valid(t["pos"]))
+        grouped = t.group_by("file_path").aggregate([("pos", "list")])
+        lists = grouped["pos_list"].combine_chunks()
+        for i, path in enumerate(grouped["file_path"].to_pylist()):
+            if path is not None and path.startswith("file:"):
+                path = _normalize_path_py(path)
+            if path in wanted:
+                out.setdefault(path, []).append(
+                    lists[i].values.to_numpy().astype(np.int64)
+                )
+    return out
 
 
 def _stat_ranges(

@@ -176,9 +176,14 @@ class HadoopFileIO(FileIO):
             )
         self._jvm = spark._jvm
         self._conf = spark._jsc.hadoopConfiguration()
+        # Fully qualified names resolve in one py4j round trip each,
+        # once; walking ``jvm.org.apache...`` costs one per package
+        # name on every call (~2 ms a class).
+        self._Path = getattr(self._jvm, "org.apache.hadoop.fs.Path")
+        self._IOUtils = getattr(self._jvm, "org.apache.commons.io.IOUtils")
 
     def _fs_path(self, path: str):
-        jpath = self._jvm.org.apache.hadoop.fs.Path(path)
+        jpath = self._Path(path)
         return jpath.getFileSystem(self._conf), jpath
 
     def list_names(self, directory: str) -> list[str]:
@@ -196,8 +201,7 @@ class HadoopFileIO(FileIO):
             raise FileNotFoundError(path)
         stream = fs.open(jpath)
         try:
-            util = self._jvm.org.apache.commons.io.IOUtils
-            return bytes(util.toByteArray(stream))
+            return bytes(self._IOUtils.toByteArray(stream))
         finally:
             stream.close()
 

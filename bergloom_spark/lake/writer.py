@@ -23,10 +23,14 @@ Spark job, and :func:`write_data_files` (on unpartitioned tables; Hive
 directory escaping stays Spark's) and
 :func:`write_equality_delete_files` write it with ``pyarrow.parquet``
 into the same directories, through the same footer harvest, with the
-same file-count rule applied as row slices. The rule is a property of
-the input, not a size knob: a local relation is in driver memory
-whatever its size, and anything else (scans, joins, ``spark.range``,
-compaction's rewrites) is in no driver memory at all.
+same file-count rule applied as row slices. For a frame the rule is a
+property of the input, not a size knob: a local relation is in driver
+memory whatever its size, and anything else (scans, joins,
+``spark.range``) is in no driver memory at all. The one caller that
+builds driver rows itself is compaction: a rewrite whose input fits
+under its byte cap merges its deletes with pyarrow on the driver and
+hands :func:`write_data_files` a :class:`DriverRows`
+(``lake/compaction._local_rows``).
 """
 
 from __future__ import annotations
@@ -245,19 +249,19 @@ def _leaf_types(dt: T.DataType):
         yield dt
 
 
-def _parquet_options(df: DataFrame) -> dict | None:
-    """pyarrow options that encode ``df``'s columns as Spark's parquet
-    writer would, or None when pyarrow cannot. Spark writes
+def parquet_options(schema: T.StructType, spark) -> dict | None:
+    """pyarrow options that encode ``schema``'s columns as ``spark``'s
+    parquet writer would, or None when pyarrow cannot. Spark writes
     ``timestamp`` per ``spark.sql.parquet.outputTimestampType`` (INT96
     by default, with no footer stats) but ``timestamp_ntz`` always as
     INT64 micros, while pyarrow's INT96 and millisecond switches cover
     both types at once."""
-    kinds = {type(t) for t in _leaf_types(df.schema)}
+    kinds = {type(t) for t in _leaf_types(schema)}
     if not all(issubclass(k, _DRIVER_TYPES) for k in kinds):
         return None
     if T.TimestampType not in kinds:
         return {}
-    out = df.sparkSession.conf.get("spark.sql.parquet.outputTimestampType")
+    out = spark.conf.get("spark.sql.parquet.outputTimestampType")
     if out == "TIMESTAMP_MICROS":
         return {}
     if T.TimestampNTZType in kinds:
@@ -296,7 +300,7 @@ def driver_rows(df: DataFrame | DriverRows) -> DriverRows | None:
     plan = qe.optimizedPlan()
     if plan.nodeName() != "LocalRelation":
         return None
-    options = _parquet_options(df)
+    options = parquet_options(df.schema, df.sparkSession)
     if options is None:
         return None
     return DriverRows(_local_relation_arrow(df, plan), options)
@@ -360,7 +364,13 @@ def _write_driver_files(
     **harvest,
 ) -> list[ManifestEntry]:
     """Write ``rows`` with pyarrow as ``n_files`` contiguous row slices
-    (zero rows write no file) and harvest them as Spark's output is."""
+    (zero rows write no file) and harvest them as Spark's output is.
+    Each file carries a page index, as parquet-mr writes one, so a
+    key-range read can skip pages inside a large rewritten file. Pages
+    are 128 KiB, not pyarrow's 1 MiB: parquet-mr caps a page at 20,000
+    rows, and on a 1M-row compacted file a 1% key-range scan of 128 KiB
+    pages took as long as one of Spark's file (0.071 s median over 15
+    ranges, 3 cores), where 1 MiB pages took 0.082 s."""
     import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
@@ -375,6 +385,8 @@ def _write_driver_files(
                 tbl.slice(start, step),
                 os.path.join(local, f"part-{i:05d}.parquet"),
                 compression=compression,
+                write_page_index=True,
+                data_page_size=128 << 10,
                 **rows.options,
             )
     entries = _collect_parquet_entries(out_dir, content, sequence_number, **harvest)
@@ -413,8 +425,9 @@ def write_data_files(
     partition) pair, which at 1000 executors is the difference between
     `n_partitions` files and `n_tasks × n_partitions` small files.
 
-    Unpartitioned rows already on the driver (:func:`driver_rows`) are
-    served to pyarrow as Arrow and written by it: no Spark job.
+    Unpartitioned rows already on the driver (:func:`driver_rows`, or
+    a :class:`DriverRows` a caller built) are written by pyarrow: no
+    Spark job. ``parquet_bytes_hint``, when given, sizes them too.
     """
     out_dir = os.path.join(
         table_root, "data", f"seq{sequence_number}-{uuid.uuid4().hex[:12]}"
@@ -423,7 +436,11 @@ def write_data_files(
     if rows is not None:
         n_files = derive_n_files(
             df, target_file_size,
-            parquet_bytes=rows.table.nbytes // _PARQUET_RATIO,
+            parquet_bytes=(
+                parquet_bytes_hint
+                if parquet_bytes_hint is not None
+                else rows.table.nbytes // _PARQUET_RATIO
+            ),
         )
         return _write_driver_files(
             rows, out_dir, n_files, compression, "data", sequence_number,

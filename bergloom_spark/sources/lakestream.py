@@ -57,6 +57,8 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql import types as T
 
+from bergloom_spark.lake.datafile import meta_renames, read_data_file
+
 __all__ = ["LakeStreamDataSource"]
 
 _log = logging.getLogger("bergloom_spark.lakestream")
@@ -177,92 +179,6 @@ def _check_retained(chain, lo: int, hi: int) -> None:
         "stream from a fresh checkpoint (full snapshot) or expire "
         "less aggressively."
     )
-
-
-def _meta_renames(meta) -> tuple:
-    """Rename history from table properties, tuple-ified for partition
-    descriptors: ((current, (historical, ...)), ...)."""
-    raw = meta.properties.get("column_renames", "")
-    if not raw:
-        return ()
-    return tuple(
-        (cur, tuple(hist)) for cur, hist in json.loads(raw).items()
-    )
-
-
-def _cast_partition_scalar(value: str, field_type):
-    """One Hive directory-string partition value → typed Arrow scalar.
-    tz-aware timestamps need the two-step parse (Arrow refuses a
-    zone-less string against a tz-typed cast; Hive dir values are
-    written in the session zone, which this lake pins to UTC)."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    arr = pa.array([value], pa.string())
-    if pa.types.is_timestamp(field_type) and field_type.tz is not None:
-        naive = arr.cast(pa.timestamp(field_type.unit))
-        return pc.assume_timezone(naive, field_type.tz)[0]
-    return arr.cast(field_type)[0]
-
-
-def _read_data_file(
-    file_path: str, columns, schema_json: str, partition, renames=()
-):
-    """Read one data file as an Arrow table in the DECLARED schema,
-    reattaching virtualized partition columns from the manifest entry
-    (round 5 — partitioned-table support): Hive-style fanout writes
-    drop the partition columns from the parquet, so they come back as
-    constant arrays cast from the directory's string value. The full
-    cast also normalizes e.g. nanosecond timestamps, which the Python
-    source bridge refuses.
-
-    Schema evolution: a column absent from the file under its CURRENT
-    name is first resolved through the table's rename history
-    (``renames`` = ((current, (historical, ...)), ...) — files written
-    before a rename store the old name; each file has exactly one of
-    the names, matching the batch reader's coalesce), and only then
-    projected as nulls (a file written before add_columns)."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    target = to_arrow_schema(
-        T.StructType.fromJson(json.loads(schema_json))
-    )
-    pdict = dict(partition)
-    rmap = {cur: tuple(hist) for cur, hist in renames}
-    present = set(pq.read_schema(file_path).names)
-
-    def stored_name(name: str) -> str | None:
-        if name in present:
-            return name
-        for h in rmap.get(name, ()):
-            if h in present:
-                return h
-        return None
-
-    stored = {
-        c: stored_name(c) for c in columns if c not in pdict
-    }
-    file_cols = sorted({s for s in stored.values() if s is not None})
-    tbl = pq.read_table(file_path, columns=file_cols)
-    n = tbl.num_rows
-    arrays = []
-    for name in columns:
-        field = target.field(name)
-        if name in pdict:
-            v = pdict[name]
-            if v is None:
-                arrays.append(pa.nulls(n, field.type))
-            else:
-                arrays.append(
-                    pa.repeat(_cast_partition_scalar(v, field.type), n)
-                )
-        elif stored[name] is None:
-            arrays.append(pa.nulls(n, field.type))
-        else:
-            arrays.append(tbl.column(stored[name]).cast(field.type))
-    return pa.Table.from_arrays(arrays, schema=target)
 
 
 class LakeStreamDataSource(DataSource):
@@ -389,7 +305,7 @@ class _LakeStreamReader(DataSourceStreamReader):
         # advances, and those appends are lost silently (review r4).
         chain = _committed_chain(meta)
         _check_retained(chain, lo, hi)
-        renames = _meta_renames(meta)
+        renames = meta_renames(meta)
         parts: list[_FilePartition] = []
         for s in chain:
             if not (lo < s.snapshot_id <= hi):
@@ -421,7 +337,7 @@ class _LakeStreamReader(DataSourceStreamReader):
         if not partition.file_path:
             return iter(())
         return iter(
-            _read_data_file(
+            read_data_file(
                 partition.file_path,
                 partition.columns,
                 partition.schema_json,
@@ -699,7 +615,7 @@ def read_change_partition(partition: _ChangePartition):
     target = to_arrow_schema(
         T.StructType.fromJson(json.loads(partition.schema_json))
     )
-    tbl = _read_data_file(
+    tbl = read_data_file(
         partition.file_path,
         partition.columns,
         partition.schema_json,
@@ -813,7 +729,7 @@ class _LakeChangelogReader(_LakeStreamReader):
         chain = _committed_chain(meta)
         _check_retained(chain, lo, hi)
         by_id = {s.snapshot_id: s for s in meta.snapshots}
-        renames = _meta_renames(meta)
+        renames = meta_renames(meta)
         # One driver read per delete file for the WHOLE range (the
         # cache spans snapshots — prior sets overlap heavily), sliced
         # per data file into the partition descriptors (verdict r5

@@ -182,6 +182,28 @@ class TestHadoopFileIOUnderFileScheme:
         with pytest.raises(FileNotFoundError):
             io.list_names(f"{root}/no-such-dir")
 
+    def test_exists_costs_three_round_trips(self, spark, tmp_path, monkeypatch):
+        # Path(), getFileSystem() and exists(): the JVM classes are
+        # resolved once per instance, not walked package by package
+        # on every call.
+        from py4j.clientserver import ClientServerConnection
+        from py4j.java_gateway import GatewayConnection
+
+        io = HadoopFileIO(spark)
+        root = f"file://{tmp_path}/h"
+        calls = []
+        for cls in (ClientServerConnection, GatewayConnection):
+            orig = cls.send_command
+
+            def send_command(self, *a, __orig=orig, **k):
+                calls.append(1)
+                return __orig(self, *a, **k)
+
+            monkeypatch.setattr(cls, "send_command", send_command)
+        for _ in range(5):
+            assert not io.exists(root)
+        assert len(calls) == 5 * 3
+
     def test_metadata_roundtrip_through_jvm_fs(self, spark, tmp_path):
         root = f"file://{tmp_path}/t"
         meta = md.TableMetadata(

@@ -1,6 +1,9 @@
 """TableMetadata.to_json: the shallow C-encoder path writes the same
 JSON tree as ``asdict``, round-trips every field, leaves the metadata
-untouched, and older indented files still load."""
+untouched, and older indented files still load. Each snapshot's JSON
+is encoded once and kept: the output stays byte-identical to one
+``json.dumps`` of the whole tree, and no lake operation leaves a kept
+encoding stale."""
 
 from __future__ import annotations
 
@@ -8,7 +11,13 @@ import copy
 import dataclasses
 import json
 
+import pandas as pd
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from bergloom_spark.lake import LakeTable
 from bergloom_spark.lake import metadata as md
+from bergloom_spark.lake.compaction import Compaction, expire_snapshots
 
 
 def _entry(i: int) -> md.ManifestEntry:
@@ -102,3 +111,71 @@ def test_indented_files_still_load(tmp_path):
     nxt = dataclasses.replace(meta, version=meta.version + 1)
     md.write_version(nxt)
     assert md.read_current(str(tmp_path)) == nxt
+
+
+def _fresh_snapshot(s: md.Snapshot) -> dict:
+    raw = {k: v for k, v in vars(s).items() if k != "_json"}
+    return {**raw, "entries": [vars(e) for e in s.entries]}
+
+
+def _one_dumps(meta: md.TableMetadata) -> str:
+    # the encoder before snapshots were memoised: one json.dumps call
+    return json.dumps(
+        {**vars(meta), "snapshots": [_fresh_snapshot(s) for s in meta.snapshots]}
+    )
+
+
+def test_memoised_to_json_is_byte_identical():
+    meta = _meta()
+    first = meta.to_json()
+    assert first == _one_dumps(meta)
+    assert all("_json" in vars(s) for s in meta.snapshots)
+    assert meta.to_json() == first  # now served from the kept fragments
+    for m in (
+        dataclasses.replace(meta, snapshots=[]),
+        dataclasses.replace(meta, snapshots=meta.snapshots[:1], refs={}),
+    ):
+        assert m.to_json() == _one_dumps(m)
+
+
+def test_kept_snapshot_json_is_never_stale(spark, tmp_path):
+    schema = T.StructType([
+        T.StructField("k", T.LongType()), T.StructField("v", T.StringType()),
+    ])
+    root = str(tmp_path / "t")
+    t = LakeTable.create(spark, root, schema)
+
+    def batch(keys, tag):
+        return spark.createDataFrame(
+            pd.DataFrame({"k": keys, "v": [f"{tag}{k}" for k in keys]}), schema
+        )
+
+    def check():
+        for meta in (t.meta, md.read_current(root)):
+            text = meta.to_json()
+            assert text == _one_dumps(meta)
+            for s in meta.snapshots:
+                assert json.loads(vars(s)["_json"]) == json.loads(
+                    json.dumps(_fresh_snapshot(s))
+                )
+        assert md.read_current(root).to_json() == t.meta.to_json()
+
+    ops = [
+        lambda: t.append(batch(list(range(20)), "a")),
+        lambda: t.upsert(batch([1, 2, 30], "u"), ["k"]),
+        lambda: t.upsert(batch([2, 3], "w"), ["k"]),
+        lambda: t.delete_where(F.col("k") == 5),
+        lambda: t.delete_where_as_vectors(F.col("k") == 6),
+        lambda: Compaction(t).compact(),
+        lambda: t.create_tag("release", t.meta.current_snapshot_id),
+        lambda: t.create_branch("dev"),
+        lambda: t.upsert(batch([7], "x"), ["k"]),
+        lambda: t.rollback_to(t.ref_snapshot_id("release")),
+        lambda: t.drop_ref("dev"),
+        lambda: expire_snapshots(t, keep_last=2),
+        lambda: t.append(batch([40, 41], "z")),
+    ]
+    for op in ops:
+        op()
+        check()
+    assert len(t.meta.snapshots) >= 3
