@@ -10,9 +10,10 @@ rewrite runs the same steps, owned by :meth:`Compaction._full_compact`:
 2. select the files to rewrite (``_select``);
 3. MoR-read the selected data files at that snapshot — one declarative
    DataFrame Spark executes distributed (scan → delete anti joins).
-   A round-robin rewrite whose input is at most
-   ``_LOCAL_REWRITE_MAX_BYTES`` instead merges on the driver, per data
-   file, with pyarrow (:func:`_local_rows`), and runs no Spark job;
+   A round-robin rewrite Spark would write as one task, and whose
+   rows fit in ``_LOCAL_REWRITE_MAX_BYTES``, instead merges on the
+   driver, per data file, with pyarrow (:func:`_local_rows`), and runs
+   no Spark job;
 4. lay the rows out: size-targeted round-robin, or range / z-order
    clustered on ``sort_cols`` (:func:`_cluster`);
 5. write the output files — with pyarrow for driver-merged rows, else
@@ -56,7 +57,12 @@ from bergloom_spark.functions.zorder import zorder_value
 from bergloom_spark.lake import metadata as md
 from bergloom_spark.lake import writer as wr
 from bergloom_spark.lake.commit import RetryConfig, RewriteFilesCommitManager
-from bergloom_spark.lake.datafile import meta_renames, read_data_file
+from bergloom_spark.lake.datafile import (
+    deleted_mask,
+    meta_renames,
+    read_data_file,
+    read_positions,
+)
 from bergloom_spark.lake.fileio import path_scheme, strip_local_scheme
 from bergloom_spark.lake.metrics import (
     GLOBAL_REGISTRY,
@@ -66,13 +72,14 @@ from bergloom_spark.lake.metrics import (
 from bergloom_spark.lake.table import LakeTable, _normalize_path_py
 from bergloom_spark.lake.validator import validate_compaction
 
-# A round-robin rewrite whose input (the selected data files plus the
-# snapshot's live delete files, by manifest ``file_size_bytes``) is at
-# most this size is merged and written on the driver with pyarrow, with
-# no Spark job (:func:`_local_rows`). Spark would run it as one task
-# anyway: the writer gives an input under ``target_file_size / 8`` one
-# output file, and pyarrow reads and encodes it several times faster.
-# Driver memory for such a rewrite is measured in SCALING.md.
+# A round-robin rewrite that Spark would write as one task is merged and
+# written on the driver with pyarrow instead, with no Spark job, when it
+# holds at most this many bytes in memory: its rows and delete keys
+# decoded, plus its delete positions (:func:`_local_rows`). Its stored
+# input (the selected data files plus the snapshot's live delete files,
+# by manifest ``file_size_bytes``) must fit too, which costs no read.
+# pyarrow reads and encodes such a file several times faster than one
+# Spark task; driver memory at the cap is measured in SCALING.md.
 _LOCAL_REWRITE_MAX_BYTES = 64 << 20
 
 
@@ -151,14 +158,9 @@ class Compaction:
             return CompactionResult(snapshot_id=snap.snapshot_id)
         inputs = [e for e in removed if e.content == md.DATA]
         try:
-            rows = None
-            if (
-                self.executor != "mock"
-                and not self.sort_cols
-                # codecs pyarrow and Spark name alike
-                and self.config.write_compression in ("snappy", "zstd", "gzip")
-            ):
-                rows = _local_rows(table, snap, inputs)
+            rows = None if self.executor == "mock" else _local_rows(
+                table, snap, inputs, self.config, self.sort_cols
+            )
             rewritten = None
             if rows is None or self.config.enable_validate_compaction:
                 rewritten = table.read(
@@ -393,33 +395,52 @@ def _cluster(
 
 
 def _local_rows(
-    table: LakeTable, snap: md.Snapshot, inputs: list[md.ManifestEntry]
+    table: LakeTable,
+    snap: md.Snapshot,
+    inputs: list[md.ManifestEntry],
+    config: CompactionConfig,
+    sort_cols: list[str] | None = None,
 ) -> wr.DriverRows | None:
     """``inputs``' merge-on-read rows at ``snap``, built on the driver
     one data file at a time, the reference's scan-task shape: read the
-    file in the table schema (:func:`datafile.read_data_file`), drop
-    its positionally deleted rows, then the rows hit by every equality
-    delete with a higher sequence number than the file's.
+    file in the table schema (:func:`datafile.read_data_file`), then
+    drop the rows its positional deletes and every equality delete with
+    a higher sequence number than the file's remove
+    (:func:`datafile.deleted_mask`).
 
-    None, and the rewrite runs as Spark jobs, above
-    ``_LOCAL_REWRITE_MAX_BYTES`` and wherever the two paths could
-    differ: partitioned or field-id tables, paths pyarrow cannot open,
-    types pyarrow does not write as Spark does
-    (:func:`writer.parquet_options`) and equality keys it does not
-    match as Spark's null-safe join does (:func:`_local_eq_ok`)."""
-    import numpy as np
+    None, and the rewrite runs as Spark jobs, unless Spark would write
+    it as one task (:func:`_spark_write_tasks`), so the driver's one
+    core loses no parallelism, and it holds at most
+    ``_LOCAL_REWRITE_MAX_BYTES`` in memory; and wherever the two paths
+    could differ: clustered layouts, codecs pyarrow names differently,
+    partitioned or field-id tables, paths pyarrow cannot open, types
+    pyarrow does not write as Spark does (:func:`writer.parquet_options`)
+    and equality keys of types it cannot match (:func:`_local_eq_ok`)."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
 
     pos_files = snap.files(md.POS_DELETE)
     eq_files = snap.files(md.EQ_DELETE)
     files = inputs + pos_files + eq_files
+    tasks = _spark_write_tasks(
+        sum(e.file_size_bytes for e in inputs),
+        config.target_file_size,
+        table.spark.sparkContext.defaultParallelism,
+    )
+    # Memory the rewrite may hold: the stored bytes first (no read),
+    # then positions by count and rows and keys as they are decoded.
+    budget = _LOCAL_REWRITE_MAX_BYTES - 8 * sum(e.record_count for e in pos_files)
     if (
-        table.meta.partition_spec
+        sort_cols
+        # codecs pyarrow and Spark name alike
+        or config.write_compression not in ("snappy", "zstd", "gzip")
+        or tasks > 1
+        or table.meta.partition_spec
         or any(e.partition for e in inputs)
         or table._field_id_read_map() is not None
         or any(path_scheme(e.file_path) for e in files)
         or sum(e.file_size_bytes for e in files) > _LOCAL_REWRITE_MAX_BYTES
+        or budget < 0
     ):
         return None
     schema = table.schema
@@ -429,109 +450,77 @@ def _local_rows(
         return None
     schema_json = schema.json()
     renames = meta_renames(table.meta)
-    positions = _local_positions(pos_files, {e.file_path for e in inputs})
-    eq_keys = [
-        (e, read_data_file(e.file_path, e.equality_ids, schema_json, (), renames))
-        for e in eq_files
-    ]
+    eq_keys = []
+    for d in eq_files:
+        keys = read_data_file(
+            d.file_path, d.equality_ids, schema_json, (), renames, budget
+        )
+        if keys is None:
+            return None
+        budget -= keys.nbytes
+        eq_keys.append((d, keys))
+    wanted = {e.file_path for e in inputs}
+    positions: dict[str, list] = {}
+    for d in pos_files:
+        dv = None
+        if d.dv_referenced_file is not None:
+            dv = (d.dv_offset, d.dv_size, d.dv_referenced_file)
+        for path, pos in read_positions(d.file_path, dv).items():
+            if path.startswith("file:"):  # an imported table's URI
+                path = _normalize_path_py(path)
+            if path in wanted:
+                positions.setdefault(path, []).append(pos)
     parts = []
     for e in inputs:
-        tbl = read_data_file(e.file_path, schema.names, schema_json, (), renames)
-        dead = np.zeros(tbl.num_rows, dtype=bool)
-        for pos in positions.get(e.file_path, ()):
-            dead[pos[(pos >= 0) & (pos < tbl.num_rows)]] = True
+        tbl = read_data_file(
+            e.file_path, schema.names, schema_json, (), renames, budget
+        )
+        if tbl is None:
+            return None
         by_ids: dict[tuple[str, ...], list] = {}
         for d, keys in eq_keys:
             if d.sequence_number > e.sequence_number:
                 by_ids.setdefault(tuple(d.equality_ids), []).append(keys)
-        for ids, keys in by_ids.items():
-            dead |= _eq_hits(tbl, list(ids), pa.concat_tables(keys))
-        parts.append(tbl.filter(pa.array(~dead)) if dead.any() else tbl)
+        dead = deleted_mask(
+            tbl,
+            positions.get(e.file_path, ()),
+            [(ids, pa.concat_tables(keys)) for ids, keys in by_ids.items()],
+        )
+        if dead.any():
+            tbl = tbl.filter(pa.array(~dead))
+        budget -= tbl.nbytes
+        if budget < 0:
+            return None
+        parts.append(tbl)
     rows = pa.concat_tables(parts) if parts else target.empty_table()
     return wr.DriverRows(rows, options)
 
 
+def _spark_write_tasks(in_bytes: int, target_file_size: int, parallelism: int) -> int:
+    """Tasks :meth:`Compaction._write` has Spark write a round-robin
+    rewrite of ``in_bytes`` with: its file count, raised to the
+    writer's parallelism floor."""
+    return max(
+        wr.derive_n_files(None, target_file_size, parquet_bytes=in_bytes),
+        wr.parallelism_floor(in_bytes, target_file_size, parallelism),
+    )
+
+
 def _local_eq_ok(e: md.ManifestEntry, target) -> bool:
-    """Does pyarrow match ``e``'s keys exactly as the Spark anti join's
-    ``eqNullSafe`` does? Not for floats (``is_in`` keeps -0.0 apart
-    from 0.0), nested types or columns the table no longer has. Several
-    key columns are matched by a join, which never matches a null: only
-    when the manifest shows the file holds none."""
+    """Can :func:`datafile.deleted_mask` match ``e``'s keys? Only on
+    columns the table still has, of types pyarrow hashes (not nested)."""
     import pyarrow as pa
 
     ids = list(e.equality_ids)
-    if not ids or not all(k in target.names for k in ids):
-        return False
     hashable = (
-        pa.types.is_integer, pa.types.is_boolean, pa.types.is_string,
-        pa.types.is_binary, pa.types.is_date, pa.types.is_timestamp,
-        pa.types.is_decimal,
+        pa.types.is_integer, pa.types.is_floating, pa.types.is_boolean,
+        pa.types.is_string, pa.types.is_binary, pa.types.is_date,
+        pa.types.is_timestamp, pa.types.is_decimal,
     )
-    if not all(any(ok(target.field(k).type) for ok in hashable) for k in ids):
-        return False
-    return len(ids) == 1 or all(e.column_null_counts.get(k) == 0 for k in ids)
-
-
-def _eq_hits(tbl, ids: list[str], keys):
-    """Boolean mask of ``tbl``'s rows equal to some row of ``keys`` on
-    every column of ``ids``: ``is_in`` for one column, with nulls
-    matching nulls as in ``eqNullSafe``; a semi join for several."""
-    import numpy as np
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    if len(ids) == 1:
-        (k,) = ids
-        hit = pc.is_in(
-            tbl[k], value_set=keys[k].combine_chunks(), skip_nulls=False
-        )
-        return hit.to_numpy(zero_copy_only=False)
-    probe = tbl.select(ids).append_column(
-        "__row", pa.array(np.arange(tbl.num_rows))
+    return bool(ids) and all(
+        k in target.names and any(ok(target.field(k).type) for ok in hashable)
+        for k in ids
     )
-    rows = probe.join(keys.select(ids), keys=ids, join_type="left semi")
-    out = np.zeros(tbl.num_rows, dtype=bool)
-    out[rows["__row"].to_numpy()] = True
-    return out
-
-
-def _local_positions(
-    entries: list[md.ManifestEntry], wanted: set[str]
-) -> dict[str, list]:
-    """{data file path: [arrays of deleted row positions]} for the
-    ``wanted`` files, from positional-delete files and deletion vectors
-    alike. A pos-delete row naming its file by a ``file:`` URI (an
-    imported table's) is normalized as the Spark scan does."""
-    import numpy as np
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-
-    from bergloom_spark.lake import puffin
-
-    out: dict[str, list] = {}
-    for e in entries:
-        if e.dv_referenced_file is not None:
-            if e.dv_referenced_file in wanted:
-                with open(e.file_path, "rb") as f:
-                    f.seek(e.dv_offset)
-                    blob = f.read(e.dv_size)
-                pos = puffin.decode_deletion_vector(blob)
-                out.setdefault(e.dv_referenced_file, []).append(
-                    pos.astype(np.int64)
-                )
-            continue
-        t = pq.read_table(e.file_path, columns=["file_path", "pos"])
-        t = t.filter(pc.is_valid(t["pos"]))
-        grouped = t.group_by("file_path").aggregate([("pos", "list")])
-        lists = grouped["pos_list"].combine_chunks()
-        for i, path in enumerate(grouped["file_path"].to_pylist()):
-            if path is not None and path.startswith("file:"):
-                path = _normalize_path_py(path)
-            if path in wanted:
-                out.setdefault(path, []).append(
-                    lists[i].values.to_numpy().astype(np.int64)
-                )
-    return out
 
 
 def _stat_ranges(

@@ -27,9 +27,10 @@ same file-count rule applied as row slices. For a frame the rule is a
 property of the input, not a size knob: a local relation is in driver
 memory whatever its size, and anything else (scans, joins,
 ``spark.range``) is in no driver memory at all. The one caller that
-builds driver rows itself is compaction: a rewrite whose input fits
-under its byte cap merges its deletes with pyarrow on the driver and
-hands :func:`write_data_files` a :class:`DriverRows`
+builds driver rows itself is compaction: a rewrite Spark would write
+as one task, and whose rows fit under a byte cap once decoded, merges
+its deletes with pyarrow on the driver and hands
+:func:`write_data_files` a :class:`DriverRows`
 (``lake/compaction._local_rows``).
 """
 
@@ -132,6 +133,17 @@ def derive_n_files(
         return max(1, min(df.rdd.getNumPartitions(), 64))
     n_files = max(1, (parquet_bytes + target_file_size - 1) // target_file_size)
     return int(min(n_files, 1 << 20))
+
+
+def parallelism_floor(
+    parquet_bytes: int | None, target_file_size: int, parallelism: int
+) -> int:
+    """Fewest tasks :func:`write_data_files` writes an unpartitioned
+    frame with: one per ``target_file_size / 8`` of input, up to the
+    cluster's ``parallelism`` (see the comment at its use)."""
+    min_file = max(1, target_file_size // 8)
+    by_min_size = max(1, (parquet_bytes or 0) // min_file)
+    return min(parallelism, by_min_size)
 
 
 def _collect_parquet_entries(
@@ -491,10 +503,10 @@ def write_data_files(
         # so the floor needs no partition-count probe — rdd.
         # getNumPartitions() would rebuild the physical plan, ~0.5 s
         # of pure planning overhead per write.)
-        spark = df.sparkSession
-        min_file = max(1, target_file_size // 8)
-        by_min_size = max(1, (pq_bytes if pq_bytes is not None else 0) // min_file)
-        floor = min(spark.sparkContext.defaultParallelism, by_min_size)
+        floor = parallelism_floor(
+            pq_bytes, target_file_size,
+            df.sparkSession.sparkContext.defaultParallelism,
+        )
         writer = df.coalesce(max(n_files, floor))
         writer.write.mode("error").option("compression", compression).parquet(out_dir)
     return _collect_parquet_entries(

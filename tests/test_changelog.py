@@ -7,6 +7,7 @@ surface as delete+insert pairs, and rewrites must emit nothing.
 
 from __future__ import annotations
 
+import datetime
 import os
 
 import pyspark.sql.functions as F
@@ -14,6 +15,7 @@ import pytest
 
 from bergloom_spark.lake import LakeTable
 from bergloom_spark.sources.lakestream import LakeStreamDataSource
+from tests.test_driver_writes import timestamp_type  # noqa: F401 (fixture)
 
 
 @pytest.fixture(scope="module", autouse=True)
@@ -433,3 +435,63 @@ def test_changelog_over_deletion_vector_commits(spark, tmp_path):
     assert sorted(k[0] for k in state) == [
         i for i in range(200) if i % 5 != 0
     ]
+
+
+@pytest.mark.parametrize("timestamp_type", ["INT96"], indirect=True)
+def test_changelog_reads_int96_timestamps_past_2262(spark, tmp_path, timestamp_type):
+    """Nanosecond INT96 reads wrap after 2262: inserted rows, deleted
+    rows and equality-delete keys must all keep their year."""
+    from pyspark.sql import types as T
+
+    utc = datetime.timezone.utc
+    times = [
+        datetime.datetime(9999, 12, 31, 23, 59, 59, 999999, tzinfo=utc),
+        datetime.datetime(2300, 1, 1, tzinfo=utc),
+        datetime.datetime(1900, 1, 1, 12, tzinfo=utc),
+    ]
+    schema = T.StructType([
+        T.StructField("k", T.LongType()), T.StructField("ts", T.TimestampType()),
+    ])
+    t = LakeTable.create(spark, str(tmp_path / "t"), schema)
+    # a one-partition RDD frame: written by Spark's parquet writer, as INT96
+    t.append(spark.createDataFrame(
+        spark.sparkContext.parallelize(list(enumerate(times)), 1), schema
+    ))
+    t.append_equality_deletes(
+        spark.createDataFrame([(times[1],)], T.StructType([schema["ts"]])), ["ts"]
+    )
+    t.delete_where(F.col("k") == 2)
+    naive = [x.astimezone(utc).replace(tzinfo=None) for x in times]
+    changes = t.read_changes().collect()
+    # collect() returns session-zone (UTC) naive datetimes
+    assert sorted(
+        (r.k, r.ts) for r in changes if r._change_type == "insert"
+    ) == list(enumerate(naive))
+    assert sorted(
+        (r.k, r.ts) for r in changes if r._change_type == "delete"
+    ) == [(1, naive[1]), (2, naive[2])]
+    assert [r.ts for r in t.read().collect()] == naive[:1]
+
+
+def test_changelog_eq_deletes_match_null_safely(spark, tmp_path):
+    """Equality deletes match as the batch read's ``eqNullSafe`` anti
+    join does, on one key column or several: null equals null, -0.0
+    equals 0.0 and NaN equals NaN."""
+    rows = [(1, None, 0.0), (2, None, 1.0), (3, 1, -0.0), (4, 1, float("nan")),
+            (5, 2, 0.0), (6, 2, float("nan"))]
+    t = LakeTable.create(
+        spark, str(tmp_path / "t"),
+        spark.createDataFrame(rows, "id long, g long, x double").schema,
+    )
+    t.append(spark.createDataFrame(rows, "id long, g long, x double"))
+    t.append_equality_deletes(
+        spark.createDataFrame([(None, 1.0), (1, 0.0), (2, float("nan"))],
+                              "g long, x double"),
+        ["g", "x"],
+    )
+    t.append_equality_deletes(spark.createDataFrame([(None,)], "g long"), ["g"])
+    deleted = sorted(
+        r.id for r in t.read_changes().collect() if r._change_type == "delete"
+    )
+    assert deleted == [1, 2, 3, 6]
+    assert sorted(r.id for r in t.read().collect()) == [4, 5]

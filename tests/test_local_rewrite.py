@@ -1,8 +1,9 @@
 """Driver-side compaction rewrites (``lake/compaction._local_rows``).
 
-A round-robin rewrite whose input fits in ``_LOCAL_REWRITE_MAX_BYTES``
-merges its deletes with pyarrow on the driver and writes the result
-with pyarrow: no Spark job. Each parity test builds the same table
+A round-robin rewrite that Spark would write as one task, and whose
+rows fit in ``_LOCAL_REWRITE_MAX_BYTES`` once decoded, merges its
+deletes with pyarrow on the driver and writes the result with pyarrow:
+no Spark job. Each parity test builds the same table
 twice and compacts one copy that way and the other with the cap at 0,
 which forces the Spark path; both must keep the same rows and commit
 the same manifest entries. The shapes the pyarrow path does not cover
@@ -172,6 +173,53 @@ def test_two_key_deletes(monkeypatch, spark, tmp_path):
     # (4, 1) matched the base row; (5, 1) did not, so (5, 2) stays
     assert rows[4] == (1, "u4") and len(rows) == 30
     assert sorted(r.g for r in t.read().collect() if r.k == 5) == [1, 2]
+
+
+def test_two_key_deletes_with_null_keys(monkeypatch, spark, tmp_path):
+    def build(root):
+        t = LakeTable.create(spark, root, KV)
+        base = [(k, k % 3, f"b{k}") for k in range(12)]
+        base += [(None, 1, "n1"), (None, 2, "n2"), (20, None, "gnull")]
+        t.append(_spark_rows(spark, base, KV))
+        t.append_equality_deletes(
+            spark.createDataFrame([(None, 1), (20, None), (4, 1), (5, None)],
+                                  "k long, g long"),
+            ["k", "g"],
+        )
+        return t
+
+    t, _ = _parity(monkeypatch, spark, tmp_path, build)
+    left = sorted(
+        ((r.k, r.g) for r in t.read().collect() if r.k is None or r.k >= 4),
+        key=lambda kg: (kg[0] is not None, kg[0] or 0),
+    )
+    # nulls match nulls on every key column, and only them
+    assert left == [(None, 2)] + [(k, k % 3) for k in range(5, 12)]
+
+
+def test_float_keys_match_as_spark_joins_do(monkeypatch, spark, tmp_path):
+    schema = T.StructType([KV["k"], T.StructField("x", T.DoubleType()), KV["g"]])
+    values = [0.0, -0.0, float("nan"), 1.5, None, -1.5, float("inf")]
+
+    def build(root):
+        t = LakeTable.create(spark, root, schema)
+        t.append(_spark_rows(spark, [(k, x, k % 2) for k, x in enumerate(values)],
+                             schema))
+        t.append(_spark_rows(spark, [(10 + k, x, 1) for k, x in enumerate(values)],
+                             schema))
+        # -0.0 matches 0.0 and NaN matches NaN, one key or several
+        t.append_equality_deletes(
+            spark.createDataFrame([(-0.0,), (float("nan"),)], "x double"), ["x"]
+        )
+        t.append_equality_deletes(
+            spark.createDataFrame([(-1.5, 1), (0.0, 1), (float("inf"), 0)],
+                                  "x double, g long"),
+            ["x", "g"],
+        )
+        return t
+
+    t, _ = _parity(monkeypatch, spark, tmp_path, build)
+    assert sorted(r.k for r in t.read().collect()) == [3, 4, 13, 14, 16]
 
 
 def test_pos_deletes_and_deletion_vectors(monkeypatch, spark, tmp_path):
@@ -348,7 +396,7 @@ def test_binpack_without_sort_takes_the_local_path(monkeypatch, spark, tmp_path)
 
 
 @pytest.mark.parametrize("shape", [
-    "sort", "partitioned", "float_key", "null_two_key", "over_cap", "codec",
+    "sort", "partitioned", "over_cap", "codec", "several_tasks",
 ])
 def test_fallbacks_run_spark_jobs(spark, tmp_path, shape):
     root = str(tmp_path / "t")
@@ -359,17 +407,12 @@ def test_fallbacks_run_spark_jobs(spark, tmp_path, shape):
         t = _debt_table(spark, root)
     if shape == "sort":
         kw = dict(strategy=SortCompaction, sort_cols=["k"])
-    elif shape == "float_key":
-        t.add_columns([T.StructField("x", T.DoubleType())])
-        t.append_equality_deletes(
-            spark.createDataFrame([(-0.0,)], "x double"), ["x"]
-        )
-    elif shape == "null_two_key":
-        t.append_equality_deletes(
-            spark.createDataFrame([(None, 1)], "k long, g long"), ["k", "g"]
-        )
     elif shape == "codec":
         kw = dict(config=CompactionConfig(write_compression="lz4"))
+    elif shape == "several_tasks":
+        # Spark writes an input of two target/8 files as two tasks
+        size = sum(e.file_size_bytes for e in t.meta.current_snapshot().files(md.DATA))
+        kw = dict(config=CompactionConfig(target_file_size=4 * size))
     strategy = kw.pop("strategy", Compaction)
     cap = 0 if shape == "over_cap" else compaction._LOCAL_REWRITE_MAX_BYTES
     assert shape != "over_cap" or sum(
@@ -392,12 +435,58 @@ def test_field_id_tables_and_remote_paths_keep_spark(spark, tmp_path):
     t = _debt_table(spark, str(tmp_path / "t"))
     snap = t.meta.current_snapshot()
     inputs = snap.files(md.DATA)
-    assert compaction._local_rows(t, snap, inputs) is not None
+    cfg = CompactionConfig()
+    assert compaction._local_rows(t, snap, inputs, cfg) is not None
     t.meta.properties["iceberg.field-id-read"] = "true"
-    assert compaction._local_rows(t, snap, inputs) is None
+    assert compaction._local_rows(t, snap, inputs, cfg) is None
     del t.meta.properties["iceberg.field-id-read"]
     remote = [dataclasses.replace(inputs[0], file_path="s3a://b/x.parquet")]
-    assert compaction._local_rows(t, snap, remote) is None
+    assert compaction._local_rows(t, snap, remote, cfg) is None
+
+
+def test_one_task_rule_matches_the_spark_writer():
+    # the driver path takes exactly the inputs Spark writes as one task
+    one = compaction._spark_write_tasks
+    target = 1 << 30
+    assert one(0, target, 3) == 1
+    assert one(2 * (target // 8) - 1, target, 3) == 1
+    assert one(2 * (target // 8), target, 3) == 2
+    assert one(2 * (target // 8), target, 1) == 1
+    assert one(target + 1, target, 1) == 2
+
+
+@pytest.mark.parametrize("shape", ["constant_string", "constant_long", "nulls"])
+def test_compressible_input_over_the_cap_keeps_spark(spark, tmp_path, shape):
+    """Parquet stores these columns in a small fraction of their
+    decoded size: the cap must bound what the driver would decode, not
+    the file size."""
+    n = 200_000
+    col = {
+        "constant_string": F.lit("x" * 100),
+        "constant_long": F.lit(7).cast("long"),
+        "nulls": F.lit(None).cast("long"),
+    }[shape]
+    schema = T.StructType([KV["k"], T.StructField(
+        "c", T.StringType() if shape == "constant_string" else T.LongType()
+    )])
+    t = LakeTable.create(spark, str(tmp_path / "t"), schema)
+    t.append(spark.range(n).select(F.lit(1).cast("long").alias("k"), col.alias("c")))
+    t.upsert(spark.createDataFrame(pd.DataFrame({"k": [2]})).withColumn(
+        "c", col), ["k"])
+    stored = sum(e.file_size_bytes for e in t.meta.current_snapshot().entries)
+    decoded = n * (8 + (104 if shape == "constant_string" else 8))
+    cap = (decoded + stored) // 2
+    assert stored * 4 < cap < decoded
+    expected = fingerprint(t.read())
+    mp = pytest.MonkeyPatch()
+    try:
+        mp.setattr(compaction, "_LOCAL_REWRITE_MAX_BYTES", cap)
+        _, jobs = _run_jobs(spark, lambda: Compaction(t).compact())
+    finally:
+        mp.undo()
+    assert jobs > 0
+    assert _created_by(t.meta.current_snapshot().files(md.DATA)) == {PARQUET_MR}
+    assert fingerprint(t.read()) == expected
 
 
 def test_validation_still_fingerprints_both_sides(monkeypatch, spark, tmp_path):
